@@ -10,18 +10,19 @@ import graft.operators.{MergeOnRead, MergeStats}
 import graft.streaming.{CdcPipeline, PipelineConfig}
 
 /** A benchmark workload: engine mode, input shape and the reads that
-  * follow each cycle of batches (`reads` scans and as many change reads). `cycleSeconds` is a cycle's nominal
-  * length on a 4-core box: a run of `--seconds` measures a fixed
-  * `seconds / cycleSeconds` cycles, so every run (and both sides of a
-  * comparison) does the same work. `warmupCycles` run first, checked but
-  * not timed: without them every timing fell 2-4x over the first cycles
-  * as the JIT caught up, and medians taken on that slope spread widely. */
+  * follow each cycle of batches (`reads` scans and as many change reads).
+  * A run measures a fixed `measuredCycles` cycles, so every run (and
+  * both sides of a comparison) does the same work. `warmupCycles` run
+  * first, checked but not timed: without them every timing fell 2-4x
+  * over the first cycles as the JIT caught up, and medians taken on that
+  * slope spread widely. Set-up repeats the engine's table set-up
+  * `setupReps` times; the first repetitions run on a cold JIT (bootstraps
+  * took 3.4 s, 1.0 s, 0.9 s, 0.8 s, 0.7 s, ...), and the median of the
+  * repetitions sits past that slope. */
 final case class Workload(
     name: String, mode: String, nearDup: String, shape: Shape,
-    batchesPerCycle: Int, reads: Int, lookups: Int, cycleSeconds: Double,
-    warmupCycles: Int) {
-  def cycles(seconds: Int): Int = math.max(1, math.round(seconds / cycleSeconds).toInt)
-}
+    batchesPerCycle: Int, reads: Int, lookups: Int, setupReps: Int,
+    measuredCycles: Int, warmupCycles: Int)
 
 object Workload {
   val all: Map[String, Workload] = Seq(
@@ -31,35 +32,29 @@ object Workload {
       Shape(baseDocs = 40000, batchEvents = 40000, width = (40, 50),
         pInsert = 0.05, pDelete = 0.05, pLate = 0.02, pInvalid = 0.005,
         hotKeys = 0.01, hotEvents = 0.2, pNearDup = 0.0),
-      batchesPerCycle = 3, reads = 5, lookups = 20, cycleSeconds = 3.75, warmupCycles = 2),
+      batchesPerCycle = 3, reads = 5, lookups = 20, setupReps = 6,
+      measuredCycles = 4, warmupCycles = 2),
     // many small uniform-key batches over a bootstrapped base; a tenth of
     // the inserts are near-duplicates of earlier inserts
     Workload("trickle_mor", "mor", "flag",
       Shape(baseDocs = 12000, batchEvents = 1000, width = (40, 50),
         pInsert = 0.2, pDelete = 0.2, pLate = 0.0, pInvalid = 0.005,
         hotKeys = 0.0, hotEvents = 0.0, pNearDup = 0.1),
-      batchesPerCycle = 3, reads = 4, lookups = 14, cycleSeconds = 5.0, warmupCycles = 1),
-    // a few medium update-heavy batches over multi-KB token arrays
-    Workload("wide_mor", "mor", "off",
-      Shape(baseDocs = 4000, batchEvents = 1000, width = (600, 900),
-        pInsert = 0.1, pDelete = 0.1, pLate = 0.0, pInvalid = 0.005,
-        hotKeys = 0.0, hotEvents = 0.0, pNearDup = 0.0),
-      batchesPerCycle = 3, reads = 3, lookups = 9, cycleSeconds = 3.3, warmupCycles = 1)
+      batchesPerCycle = 3, reads = 4, lookups = 14, setupReps = 8,
+      measuredCycles = 3, warmupCycles = 1)
   ).map(w => w.name -> w).toMap
 }
 
 final case class Args(
-    workload: String = "", seed: Long = 1L, seconds: Int = 12, trace: Boolean = false,
+    workload: String = "", seed: Long = 1L, trace: Boolean = false,
     tmp: String = "", cores: Int = 4, traces: String = "", selfTest: Boolean = false)
 
 object Main {
-  val SetupReps = 3
   val Buckets   = 16
 
   def parse(args: List[String], a: Args = Args()): Args = args match {
     case "--workload" :: v :: t => parse(t, a.copy(workload = v))
     case "--seed" :: v :: t     => parse(t, a.copy(seed = v.toLong))
-    case "--seconds" :: v :: t  => parse(t, a.copy(seconds = v.toInt))
     case "--trace" :: v :: t    => parse(t, a.copy(trace = v == "1"))
     case "--tmp" :: v :: t      => parse(t, a.copy(tmp = v))
     case "--cores" :: v :: t    => parse(t, a.copy(cores = v.toInt))
@@ -75,7 +70,9 @@ object Main {
       .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       .master(s"local[${a.cores}]")
       .appName("graft-perfbench")
-      .config("spark.sql.shuffle.partitions", a.cores.toLong)
+      // four shuffle tasks per core, so a stage can rebalance around a
+      // core that a co-tenant slows
+      .config("spark.sql.shuffle.partitions", 4L * a.cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -144,8 +141,8 @@ object Main {
   }
 }
 
-/** One benchmark run of one workload: set up, measure cycles of
-  * batches and reads for the requested seconds, check every output
+/** One benchmark run of one workload: set up, measure a fixed number of
+  * cycles of batches and reads, check every output
   * against the [[Oracle]], print the metrics. */
 final class Bench(spark: SparkSession, w: Workload, a: Args) {
   import Main._
@@ -292,43 +289,78 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
     }
   }
 
-  // ---- set-up: build the inputs (and bootstrap the base) from the seed ----
+  // ---- set-up: build the inputs from the seed, then the engine's table ----
 
   private final class State(
-      val dir: Path, val gen: Gen, val oracle: Oracle,
-      val p: Option[CdcPipeline],               // MOR: the bootstrapped table
+      val gen: Gen, val oracle: Oracle,
+      val table: Option[CdcPipeline],           // MOR: the bootstrapped table
       val inputs: Seq[(Path, Int)],             // COW: the batch dirs, events
       val expChanges: Long)                     // COW: rows of the change read
 
-  private def setupOnce(rep: Int): State = span("setup") {
-    val dir = tmp.resolve(s"setup-$rep")
-    val gen = new Gen(a.seed, w.shape)
-    val oracle = new Oracle
-    untimed("setup") {
-      if (w.mode == "cow") {
-        val batches = gen.insertBatch() +: Seq.fill(w.batchesPerCycle - 1)(gen.batch())
-        var fromLive = Set.empty[String]
-        val inputs = batches.zipWithIndex.map { case (evs, b) =>
-          val d = dir.resolve(s"in/batch-$b")
-          Gen.writeEvents(spark, evs, d.toString)
-          oracle.fold(evs)
-          if (b == 0) fromLive = oracle.liveIds
-          (d, evs.size)
-        }
-        // the change read covers the update batches; their stale
-        // re-deliveries sit below the insert batch's watermark, so the
-        // engine answers it by state diff: net changes only
-        new State(dir, gen, oracle, None, inputs,
-          oracle.netChangesSince(fromLive, batches.head.map(_.lsn).max))
-      } else {
-        val base = gen.base()
-        oracle.fold(base)
-        val d = dir.resolve("in/base")
-        Gen.writeSnapshot(spark, base, d.toString)
-        val p = pipeline(dir)
-        span("bootstrap")(p.bootstrap(spark.read.schema(Gen.SnapshotSchema).parquet(d.toString), gen.floorLsn))
-        new State(dir, gen, oracle, Some(p), Nil, 0L)
+  /** Generates the inputs from the seed, folds them into the oracle and
+    * writes them as parquet. Returns the COW batch dirs with their event
+    * counts and the rows the COW change read must return; the events
+    * themselves are dropped. */
+  private def writeInputs(gen: Gen, oracle: Oracle): (Seq[(Path, Int)], Long) =
+    if (w.mode == "cow") {
+      val batches = gen.insertBatch() +: Seq.fill(w.batchesPerCycle - 1)(gen.batch())
+      var fromLive = Set.empty[String]
+      val inputs = batches.zipWithIndex.map { case (evs, b) =>
+        val d = tmp.resolve(s"in/batch-$b")
+        Gen.writeEvents(spark, evs, d.toString)
+        oracle.fold(evs)
+        if (b == 0) fromLive = oracle.liveIds
+        (d, evs.size)
       }
+      // the change read covers the update batches; their stale
+      // re-deliveries sit below the insert batch's watermark, so the
+      // engine answers it by state diff: net changes only
+      (inputs, oracle.netChangesSince(fromLive, batches.head.map(_.lsn).max))
+    } else {
+      val base = gen.base()
+      oracle.fold(base)
+      Gen.writeSnapshot(spark, base, tmp.resolve("in/base").toString)
+      (Nil, 0L)
+    }
+
+  /** One engine set-up, an initial load into a fresh directory: COW
+    * applies the insert batch to an empty table, MOR bootstraps the base. */
+  private def setUpTable(rep: Int, gen: Gen, inputs: Seq[(Path, Int)]): CdcPipeline = {
+    val p = pipeline(tmp.resolve(s"setup-$rep"))
+    if (w.mode == "cow")
+      span("load")(p.applyBatch(spark.read.schema(Gen.EventSchema).parquet(inputs.head._1.toString), 0L))
+    else
+      span("bootstrap")(p.bootstrap(
+        spark.read.schema(Gen.SnapshotSchema).parquet(tmp.resolve("in/base").toString), gen.floorLsn))
+    p
+  }
+
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def dropTable(p: CdcPipeline): Unit =
+    graft.table.Fs.deleteRecursively(Paths.get(p.table.root).getParent)
+
+  /** Builds the inputs (untimed), then repeats the engine's set-up
+    * `setupReps` times, timing each alone. MOR keeps the last bootstrapped
+    * table; COW cycles each load their own empty table, so its set-up
+    * tables are dropped. Returns the state, the set-up durations in
+    * seconds, and the old generation after the inputs are built and before any engine
+    * call, MB: Spark's own baseline plus the benchmark's inputs and
+    * oracle, the part of `heap_peak_mb` that is not the engine's. */
+  private def setup(): (State, Seq[Double], Double) = span("setup") {
+    untimed("setup") {
+      val gen = new Gen(a.seed, w.shape)
+      val oracle = new Oracle
+      val (inputs, expChanges) = writeInputs(gen, oracle)
+      val inputsMb = heap.sampleMb()
+      val reps = (1 to w.setupReps).map(rep => span("table")(timed(setUpTable(rep, gen, inputs))))
+      val kept = if (w.mode == "mor") Some(reps.last._1) else None
+      reps.map(_._1).filterNot(kept.contains).foreach(dropTable)
+      (new State(gen, oracle, kept, inputs, expChanges), reps.map(_._2), inputsMb)
     }
   }
 
@@ -337,8 +369,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
   /** COW: a fresh empty table per cycle takes the same insert batch and
     * update batches, so every cycle measures the same work. */
   private def cowCycle(s: State, k: Int): Unit = span("cycle") {
-    val root = tmp.resolve(s"cow-$k")
-    val p = pipeline(root)
+    val p = pipeline(tmp.resolve(s"cow-$k"))
     var v0 = -1L
     s.inputs.zipWithIndex.foreach { case ((d, n), b) =>
       commit(p, d, b.toLong, n)
@@ -347,7 +378,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
     reads(p, s.gen, s.oracle)
     changesRead(p, v0, s.expChanges)
     checkSideTables(p, s.gen)
-    graft.table.Fs.deleteRecursively(root)
+    dropTable(p)
   }
 
   /** MOR: batches append deltas to the same table, reads fold them, and
@@ -355,7 +386,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
     * so every cycle starts from a table of about the same size. */
   private var batchNo = 0L
   private def morCycle(s: State, k: Int): Unit = span("cycle") {
-    val p = s.p.get
+    val p = s.table.get
     val v0 = p.table.currentVersion.get
     var expChanges = 0L
     val dirs = (0 until w.batchesPerCycle).map { _ =>
@@ -384,16 +415,8 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
   def run(): Boolean = {
     val calib = mutable.ArrayBuffer(Noise.calibMs())
     val load0 = Noise.load1()
-    val (setupRuns, setupSteal) = Noise.stealOver {
-      (0 until SetupReps).map { rep =>
-        val t0 = System.nanoTime()
-        val st = setupOnce(rep)
-        (st, (System.nanoTime() - t0) / 1e9)
-      }
-    }
-    setupRuns.init.foreach { case (st, _) => graft.table.Fs.deleteRecursively(st.dir) }
+    val ((state, setupRuns, inputsMb), setupSteal) = Noise.stealOver(setup())
     progress("set-up done")
-    val state = setupRuns.last._1
     calib += Noise.calibMs()
 
     def cycle(k: Int): Unit =
@@ -406,9 +429,9 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
     trace.foreach(_.start())
     heap.start()
     val t0 = System.nanoTime()
-    val cycles = w.cycles(a.seconds)
+    val cycles = w.measuredCycles
     val (_, measureSteal) = Noise.stealOver {
-      (1 to cycles).foreach { k => cycle(w.warmupCycles + k); heap.sample() }
+      (1 to cycles).foreach { k => cycle(w.warmupCycles + k); heap.sampleMb() }
     }
     val measured = (System.nanoTime() - t0) / 1e9
     progress("measured")
@@ -417,7 +440,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
 
     val commitSum = commits.sum
     val e2e = Seq(
-      ("setup_s", median(setupRuns.map(_._2)), "s"),
+      ("setup_s", median(setupRuns), "s"),
       ("events_per_s", if (commitSum > 0) events / commitSum else 0.0, "events/s"),
       ("commit_p50_s", median(commits.toSeq), "s"),
       ("scan_s", median(scans.toSeq), "s"),
@@ -428,7 +451,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
       s""""workload":"${w.name}","seed":${a.seed},"cycles":$cycles,"measured_s":${num(measured)}""",
       s""""samples":{"commit":${commits.size},"scan":${scans.size},"lookup":${lookups.size},"changes":${changes.size},"compact":${compacts.size}}""",
       s""""noise":{"calib_ms":${calib.map(num).mkString("[", ",", "]")},"steal_pct":{"setup":${num(setupSteal)},"measure":${num(measureSteal)}},"load1":[${num(load0)},${num(load1)}]}""",
-      s""""setup_runs_s":${setupRuns.map(r => num(r._2)).mkString("[", ",", "]")}""",
+      s""""setup_runs_s":${setupRuns.map(num).mkString("[", ",", "]")},"inputs_heap_mb":${num(inputsMb)}""",
       Seq("commit" -> commits, "scan" -> scans, "lookup" -> lookups, "changes" -> changes, "compact" -> compacts)
         .map { case (k, xs) => s""""$k":${xs.map(x => f"$x%.4f").mkString("[", ",", "]")}""" }
         .mkString(""""samples_s":{""", ",", "}"))
@@ -438,7 +461,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
       if (!a.trace) e2e
       else {
         org.apache.spark.BenchBus.drain(sc)
-        val layers = perLayer(calib.toSeq, math.max(setupSteal, measureSteal), measureStart)
+        val layers = perLayer(calib.toSeq, math.max(setupSteal, measureSteal), measureStart, inputsMb)
         writeTrace()
         layers ++ e2e.collect {
           case (n, v, u) if Set("events_per_s", "commit_p50_s", "scan_s", "lookup_p50_ms", "changes_s")(n) =>
@@ -453,7 +476,8 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
 
   // ---- per-layer metrics from the traced run ----
 
-  private def perLayer(calib: Seq[Double], steal: Double, from: Long): Seq[(String, Double, String)] = {
+  private def perLayer(
+      calib: Seq[Double], steal: Double, from: Long, inputsMb: Double): Seq[(String, Double, String)] = {
     val t = trace.get
     val jobs = t.jobs
     def inSpan(s: Spans.Span) = jobs.filter(j => j.start >= s.start && j.start <= s.end)
@@ -515,6 +539,7 @@ final class Bench(spark: SparkSession, w: Workload, a: Args) {
       ("ops.lookup_tail_ms", if (lookups.size < 20) 0.0
         else quantile(lookups.toSeq, 1.0 - 10.0 / lookups.size) * 1000, "ms"),
       ("ops.compact_s", median(compacts.toSeq), "s"),
+      ("heap.inputs_mb", inputsMb, "MB"),
       ("noise.calib_ms", median(calib), "ms"),
       ("noise.steal_pct", steal, "%"))
     System.err.println(s"perfbench: labels seen ${t.labels.mkString(", ")}")

@@ -63,11 +63,14 @@ final class HeapPeak {
 
   def start(): Unit = peak = 0L
 
-  def sample(): Unit = {
+  /** Old generation after a full collection, MB; also raises the peak. */
+  def sampleMb(): Double = {
     System.gc()
-    ManagementFactory.getMemoryPoolMXBeans.asScala
+    val used = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))
-      .foreach(p => Option(p.getCollectionUsage).foreach(u => peak = math.max(peak, u.getUsed)))
+      .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum
+    peak = math.max(peak, used)
+    used / (1024.0 * 1024.0)
   }
 
   def peakMb: Double = peak / (1024.0 * 1024.0)
