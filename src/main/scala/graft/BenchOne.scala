@@ -10,9 +10,17 @@ import graft.streaming.{CdcPipeline, PipelineConfig}
   * the scaling study; Bench aggregates the official numbers).
   *
   * args: <mode> <cores> <changeLogDir> <batches> <buckets>
-  * If changeLogDir is "-", stages a fresh one from SPARK_GRAFT_SF_DIR ×
-  * SPARK_GRAFT_REPLICATE first. Prints one line:
-  *   BENCHONE mode=<m> cores=<c> events=<n> sec=<s> eps=<n/s>
+  * Modes:
+  *  - `cow` | `mor` | `auto`: stream the change log through a pipeline in
+  *    that mode. If changeLogDir is "-", stages a fresh one from
+  *    SPARK_GRAFT_SF_DIR × SPARK_GRAFT_REPLICATE first. Prints one line:
+  *    BENCHONE mode=<m> cores=<c> events=<n> sec=<s> eps=<n/s>
+  *  - `stage`: only write the change log to changeLogDir.
+  *  - `skew`: run [[Bench.skewStudy]] alone.
+  *  - `compactab`: same-JVM interleaved A/B of compact's agg and sort
+  *    folds over a MOR table built from changeLogDir.
+  *  - `bootstrap` | `bootmerge`: the initial load through bootstrap's
+  *    bucketed write vs through MERGE into the empty table.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -55,40 +63,9 @@ object BenchOne {
       return
     }
 
-    if (mode == "cowab") {
-      // Same-JVM interleaved A/B of the COW merge variants (Merge.apply's
-      // join / shj / fold). Cold fresh-JVM samples on this box vary 2.5×
-      // run-to-run (BASELINE.md round-4 environment notes), swamping any
-      // real plan difference; interleaving J/S/F inside ONE warm session
-      // makes environment drift hit every variant symmetrically, and the
-      // full-scale warm pass first absorbs the lazily-committed-heap
-      // settling that dominates each JVM's first full-size run. Variant
-      // switches via the graft.merge.variant system property.
-      val variants = Seq("join", "shj", "fold")
-      val log      = args(2)
-      val nEv      = spark.read.parquet(s"$log/batch-*").count()
-      sys.props("graft.merge.variant") = "join"
-      val warmSec = runOnce(spark, log, batches, buckets, "cow")
-      println(f"BENCHONE cowab warm sec=$warmSec%.2f")
-      val samples = for (s <- 1 to 3; v <- variants) yield {
-        sys.props("graft.merge.variant") = v
-        val sec = runOnce(spark, log, batches, buckets, "cow")
-        println(f"BENCHONE cowab sample=$s variant=$v events=$nEv sec=$sec%.2f eps=${nEv / sec}%.1f")
-        (v, sec)
-      }
-      sys.props.remove("graft.merge.variant")
-      variants.foreach { v =>
-        val xs = samples.filter(_._1 == v).map(_._2).sorted
-        println(f"BENCHONE cowab median variant=$v sec=${xs(xs.size / 2)}%.2f " +
-          f"runs=${xs.map(x => f"$x%.1f").mkString("/")}")
-      }
-      spark.stop()
-      return
-    }
-
     if (mode == "compactab") {
-      // Interleaved same-JVM A/B of the three whole-table fold plans
-      // (compact's agg / winner-attach / sort) with a NOOP sink (guide
+      // Interleaved same-JVM A/B of compact's two whole-table fold plans
+      // (agg / sort) with a NOOP sink (guide
       // §1.4): the table is built ONCE (4 MOR batches, no compact), then
       // each sample computes the fold and discards it — isolating the
       // fold plan from the (common) write and from this box's 2.5×
@@ -105,12 +82,10 @@ object BenchOne {
           p.applyBatch(spark.read.parquet(f"$log/batch-$b%05d"), b.toLong); ()
         }
         val m = p.table.current.get
-        def fold(v: String) = v match {
-          case "agg"  => MergeOnRead.resolveViaAgg(p.table, m)
-          case "wa"   => MergeOnRead.resolveViaWinners(p.table, m)
-          case "sort" => MergeOnRead.resolve(p.table)
-        }
-        val variants = Seq("agg", "wa", "sort")
+        def fold(v: String) =
+          if (v == "agg") MergeOnRead.resolveViaAgg(p.table, m)
+          else MergeOnRead.resolve(p.table)
+        val variants = Seq("agg", "sort")
         variants.foreach { v => // warm codegen per variant
           fold(v).limit(1).write.format("noop").mode("overwrite").save()
         }
@@ -150,7 +125,7 @@ object BenchOne {
       // A/B for the initial-load claim (Bootstrap scaladoc): the same
       // rep-0 insert slice applied through bootstrap's join-free bucketed
       // write vs through the ordinary MERGE path into the empty table
-      // (full-outer join against nothing). Same rows, same validation
+      // (a sort and LWW fold against nothing). Same rows, same validation
       // work, same bucketed output — only the write plan differs.
       // GRAFT_BOOT_SWEEP=1 adds bootstrap's duplicate sweep to the timed
       // path (off by default: the slice is unique-keyed by construction,
@@ -273,8 +248,7 @@ object BenchOne {
       val tc = System.nanoTime()
       MergeOnRead.compact(p.table, "final")
       System.err.println(
-        f"[benchone] compact fold=${sys.env.getOrElse("GRAFT_FOLD", "auto")} " +
-          f"wall=${(System.nanoTime() - tc) / 1e9}%.2fs")
+        f"[benchone] compact wall=${(System.nanoTime() - tc) / 1e9}%.2fs")
     }
     (System.nanoTime() - t0) / 1e9
   }

@@ -67,9 +67,8 @@ object PlanDump {
         // — so the aggregate needs no collapsing pass of its own
         rep(candRaw).explain("formatted")
       case "compact_fold" =>
-        // the whole-table compaction fold, one-pass agg (default) vs the
-        // round-6 winner-attach study variant (GRAFT_FOLD=wa) — the
-        // SortAggregate-vs-HashAggregate/SHJ shape the A/B measured
+        // the whole-table compaction fold, one-pass agg (compact's pick
+        // when most buckets are dirty)
         import graft.streaming.{CdcPipeline, PipelineConfig}
         val base = java.nio.file.Files.createTempDirectory("graft-plandump-cf")
         try {
@@ -82,10 +81,8 @@ object PlanDump {
           p.applyBatch(ev.filter(col("lsn") < graft.ingest.CdcGenerator.LsnStride), 0L)
           p.applyBatch(ev.filter(col("lsn") >= graft.ingest.CdcGenerator.LsnStride), 1L)
           val m = p.table.current.get
-          println("==== compact fold, one-pass agg (resolveViaAgg — default) ====")
+          println("==== compact fold, one-pass agg (resolveViaAgg) ====")
           graft.operators.MergeOnRead.resolveViaAgg(p.table, m).explain("formatted")
-          println("==== compact fold, winner-attach (resolveViaWinners — GRAFT_FOLD=wa) ====")
-          graft.operators.MergeOnRead.resolveViaWinners(p.table, m).explain("formatted")
         } finally graft.table.Fs.deleteRecursively(base)
       case "query" =>
         val name = args(2)

@@ -113,7 +113,7 @@ object SparkEntry {
   /** Build + stream a full pipeline over a fresh temp table. */
   private def runPipeline(
       spark: SparkSession, dir: String, mode: String,
-      mergeVariant: String = "", nearDupPolicy: String = "off"): CdcPipeline = {
+      nearDupPolicy: String = "off"): CdcPipeline = {
     val base = tempRoot("graft-cdc")
     val p = new CdcPipeline(spark, PipelineConfig(
       tableRoot = s"$base/table",
@@ -123,7 +123,6 @@ object SparkEntry {
       lineageDir = s"$base/lineage",
       numBuckets = 16,
       mode = mode,
-      mergeVariant = mergeVariant,
       nearDupPolicy = nearDupPolicy))
     p.runAvailableNow(maxFilesPerTrigger = Some(4))
     p
@@ -213,16 +212,10 @@ object SparkEntry {
 
   /** End-to-end pipeline over a staged table; returns final state.
     * @param mode "cow" (rewrite touched buckets) or "mor" (delta files +
-    *             read-time fold) — same final state either way.
-    * @param variant non-empty pins that COW physical merge plan via
-    *   `PipelineConfig.mergeVariant` (per-pipeline, no global state) —
-    *   the variants are semantics-equivalent, so the oracle is shared. */
+    *             read-time fold) — same final state either way. */
   private def cdcMergeState(
-      spark: SparkSession, dir: String, mode: String = "cow",
-      variant: String = ""): DataFrame =
-    if (variant.isEmpty) finalState(stagedPipeline(spark, dir, mode))
-    else finalState(pipelineCache.computeIfAbsent(
-      s"$dir#$mode#$variant", _ => runPipeline(spark, dir, mode, variant)))
+      spark: SparkSession, dir: String, mode: String = "cow"): DataFrame =
+    finalState(stagedPipeline(spark, dir, mode))
 
   private def docs(s: SparkSession, dir: String)  = s.read.parquet(s"$dir/documents.parquet")
   private def evts(s: SparkSession, dir: String)  = s.read.parquet(s"$dir/events.parquet")
@@ -254,12 +247,10 @@ object SparkEntry {
     // auto picks the commit shape per batch (exact bulk/trickle probe vs
     // the live table size); state is mode-independent → shared oracle
     "q_cdc_merge_auto" -> ((s, dir) => cdcMergeState(s, dir, mode = "auto")),
-    // the COW fold physical plan (one bucket-keyed exchange through the
-    // MOR LWW machinery) must land the same state as the join plan —
-    // plan-interchangeability under the driver's own oracle, not just
-    // the in-repo equivalence gates (MergeVariantSpec)
-    "q_cdc_merge_state_fold" -> ((s, dir) =>
-      cdcMergeState(s, dir, mode = "cow", variant = "fold")),
+    // pins the COW fold (one bucket-keyed exchange through the MOR LWW
+    // kernel) under its own key; since the fold became the only COW plan
+    // it runs the same pipeline as q_cdc_merge_state
+    "q_cdc_merge_state_fold" -> ((s, dir) => cdcMergeState(s, dir)),
     "q_cdc_events" -> ((s, dir) =>
       CdcGenerator.events(s, dir)
         .select(col("lsn"), col("op"), col("doc_id"),

@@ -10,14 +10,14 @@ import graft.table.{Manifest, SnapshotTable}
   * bootstrap pattern (load the upstream table's full state once, then
   * tail the change stream from the snapshot's LSN).
   *
-  * Why not just MERGE into the empty table: [[Merge]] full-outer-joins
-  * the batch against the target slice. Against an empty table the join
-  * matches nothing, but the batch still pays the join's shuffle machinery
-  * and per-row action classification — pure overhead at bootstrap scale
+  * Why not just MERGE into the empty table: [[Merge]] folds the batch
+  * with the target slice. Against an empty table the fold finds nothing
+  * to merge, but the batch still pays its sort, LWW run-fold and per-row
+  * action classification — pure overhead at bootstrap scale
   * (the 100-TB initial load is the single largest write the table will
   * ever see). This path is the minimal plan instead: one hash-partition
   * shuffle on the bucket key → bucketed parquet write → one manifest
-  * commit. No join, no tombstones, no LWW fold.
+  * commit. No tombstones, no LWW fold.
   *
   * Every snapshot row is stamped `_lsn = asOfLsn` and the manifest's
   * watermark starts there, so subsequent CDC events interact correctly by

@@ -39,9 +39,10 @@ import graft.functions.DedupOps
   *    BEFORE the merge commit, named by commitId, and readers admit
   *    only files whose commitId is in the TABLE's applied-commit ledger
   *    — a crash before the commit leaves invisible files; the replay
-  *    writes a fresh nonce dir and the duplicate rows collapse in the
-  *    probe's pair-distinct. A crash AFTER the commit loses nothing
-  *    (the rows were written first).
+  *    writes a fresh nonce dir whose duplicate rows only repeat
+  *    candidate pairs, and the probe's per-doc `min_by` representative
+  *    picks the same earliest match with or without them. A crash
+  *    AFTER the commit loses nothing (the rows were written first).
   *
   * Match rule (deliberately non-recursive so a SQL oracle can replay
   * it): an arriving insert X is a near-dup of Y iff they share ≥1 band
@@ -244,8 +245,9 @@ object DedupIndex {
     * the folded rows stay ledger-visible), then delete the originals.
     * Also permanently drops crash-replay duplicate rows (distinct).
     * Crash-safe without coordination: a crash after the write leaves
-    * old + new dirs — duplicate rows the probe's pair-distinct absorbs
-    * until the next compaction sweeps them. Returns dirs folded. */
+    * old + new dirs — duplicate rows that leave the probe's per-doc
+    * `min_by` representative unchanged until the next compaction sweeps
+    * them. Returns dirs folded. */
   def compact(
       spark: SparkSession, dir: String, applied: Set[String],
       intoCommitId: String, numBuckets: Int = IndexBuckets): Int = {

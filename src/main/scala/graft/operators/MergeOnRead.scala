@@ -234,13 +234,11 @@ object MergeOnRead {
   private val PerBucketPlanLimit = 64
 
   /** Target rows per bucket-local fold task (scale-adaptive branch
-    * sizing — see the group fold in [[foldDirtyBuckets]]). Parameterised
-    * for clusters via `graft.fold.rowsPerTask`; the default keeps a
+    * sizing — see the group fold in [[foldDirtyBuckets]]): keeps a
     * branch's external sort comfortably in one task's memory (~250k
     * full-payload rows ≈ 50 MB) while a fixture-scale fold collapses to
     * a single small-plan branch. */
-  private def FoldRowsPerTask: Long =
-    sys.props.get("graft.fold.rowsPerTask").map(_.toLong).getOrElse(262144L)
+  private val FoldRowsPerTask = 262144L
 
   private[graft] def resolveBuckets(
       table: SnapshotTable,
@@ -289,8 +287,8 @@ object MergeOnRead {
   }
 
   /** Action column emitted by the classified fold: the NET transition per
-    * key, matching the per-row action taxonomy of the round-1 join-based
-    * merge (keep / stale / insert / update / delete / delete_noop). */
+    * key (keep / stale / insert / update / delete / delete_noop) — the
+    * source of [[Merge]]'s and [[foldTouched]]'s MergeStats counts. */
   private[operators] val ActionCol = "_action"
 
   /** Folded rows for delta-carrying buckets ONLY (callers union clean
@@ -479,22 +477,14 @@ object MergeOnRead {
     // (plan-gated — the trickle case's precious property); above it the
     // sort path would pay a bucket-keyed exchange + external sort + row
     // codec anyway, and the hash-agg fold beats that by ~2× (BASELINE.md
-    // round-4). GRAFT_FOLD=agg|sort forces either for studies.
-    val payloadFields =
-      cur.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq
-    val choice = sys.env.get("GRAFT_FOLD")
-      .getOrElse(if (touched.size > PerBucketPlanLimit) "agg" else "sort")
-    val useAgg = choice != "sort"
-    val folded = choice match {
-      case "agg" => aggLww(
+    // round-4).
+    val useAgg = touched.size > PerBucketPlanLimit
+    val folded =
+      if (useAgg) aggLww(
         eventsFrame(table, cur, touchedBase, cur.deltaFiles),
-        payloadFields, classified = true)
-      case "sort" => foldDirtyBuckets(
-        table, cur, touchedBase, cur.deltaFiles, classified = true)
-      case _ => aggLwwViaWinners(
-        eventsFrame(table, cur, touchedBase, cur.deltaFiles),
-        payloadFields, classified = true)
-    }
+        cur.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq,
+        classified = true)
+      else foldDirtyBuckets(table, cur, touchedBase, cur.deltaFiles, classified = true)
     val obs = Observation(s"fold-$commitId")
     def cnt(a: String) = sum(when(col(ActionCol) === a, 1L).otherwise(0L)).as(a)
     val observed = folded.observe(
@@ -841,22 +831,10 @@ object MergeOnRead {
     // WHOLE table through a doc_id exchange, so a mostly-CLEAN table
     // (scheduled compact after a trickle) keeps the bucket-local fold,
     // where clean buckets stream by without folding at all.
-    // GRAFT_FOLD=agg|sort forces either (the study knob).
     val dirtyFrac =
       cur.deltaFiles.map(_.bucket).distinct.size.toDouble / cur.numBuckets
-    // round-6 re-measure: the winner-attach fold (GRAFT_FOLD=wa,
-    // guide-§8 decide-narrow/attach-once) was built and A/B'd against
-    // this agg on the 16M-event bench table — interleaved noop-sink
-    // medians agg 5.2-5.7 s best-case vs wa 7.9 s: the payload rows here
-    // are narrow enough that two sorts beat an extra scan + join. The
-    // one-pass agg stays the mostly-dirty default; wa remains the
-    // equivalence-gated study knob (OPTIMIZATION_r06.md).
-    val base = sys.env.get("GRAFT_FOLD")
-        .getOrElse(if (dirtyFrac >= 0.5) "agg" else "sort") match {
-      case "agg"  => resolveViaAgg(table, cur)
-      case "sort" => resolve(table)
-      case _      => resolveViaWinners(table, cur)
-    }
+    val base =
+      if (dirtyFrac >= 0.5) resolveViaAgg(table, cur) else resolve(table)
     val resolved = base
       .filter(
         !coalesce(col(Merge.TombCol), lit(false)) ||
@@ -889,7 +867,7 @@ object MergeOnRead {
     * semantics match [[localLww]] exactly: struct ordering on
     * (lsn, _from_base) makes the base row beat a same-LSN delta (false <
     * true). Semantically ≡ resolve() by construction (PipelineSpec gate);
-    * kept env-gated (GRAFT_FOLD=agg) for the measured scaling study. */
+    * [[compact]] picks it when most buckets are dirty. */
   private[graft] def resolveViaAgg(table: SnapshotTable, m: Manifest): DataFrame = {
     val payloadFields =
       m.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq
@@ -958,84 +936,6 @@ object MergeOnRead {
         Seq(col("_w.lsn").as(LsnCol), (col("_w.op") === "D").as(Merge.TombCol)) ++
         (if (classified) Seq(action.as(ActionCol)) else Seq.empty): _*)
   }
-
-  /** The full-table LWW fold in the decide-narrow/attach-once shape
-    * (guide §8; round-6): [[aggLww]]'s one-pass `max_by` is a
-    * SortAggregate — the struct-with-array buffer disqualifies hash
-    * aggregation — so the whole payload (token arrays included) pays a
-    * partial sort, a doc_id exchange, and a final sort. Here the winner
-    * is DECIDED on narrow columns first: per-doc max lsn, the
-    * base-at-max flag, and both classification facts are all
-    * fixed-width-buffer aggregates (HashAggregateExec, map-side partial
-    * combine, parquet scan pruned to doc_id/lsn/op — the token arrays
-    * are never read in this pass). The payload then moves ONCE: a
-    * shuffled-hash join (hint — no sort on either side; build side is
-    * the narrow winners) attaches the winner key, a filter keeps exactly
-    * the argmax rows, and the residual collapse of duplicate survivor
-    * copies (at-least-once redelivery can land the same (doc, lsn) delta
-    * under several commits) runs the SAME `max_by`/tie order as
-    * [[aggLww]] — but over winners only, and with NO new exchange: the
-    * join already clustered rows by doc_id, which satisfies the
-    * aggregate's required distribution. Semantics ≡ [[aggLww]] by
-    * construction (argmax-row filter: lsn = max lsn, from_base ⟺ a base
-    * row exists at that lsn — base wins ties exactly like the
-    * struct-ordering on (lsn, _from_base)); classification facts are
-    * computed over ALL of a doc's rows in the narrow pass, never over
-    * survivors. Gated by PipelineSpec's fold-equivalence tests (the
-    * resolveViaAgg ≡ resolve suite and the foldTouched state+stats
-    * cross-check). */
-  private[operators] def aggLwwViaWinners(
-      events: DataFrame, payloadFields: Seq[StructField],
-      classified: Boolean): DataFrame = {
-    val payloadCols = payloadFields.map(_.name)
-    val winners = events
-      .groupBy(col("doc_id"))
-      .agg(
-        max(col("lsn")).as("_g_wl"),
-        max(when(col("_from_base"), col("lsn"))).as("_g_wlb"),
-        max(when(col("_from_base") && col("op") =!= "D", 1).otherwise(0)).as("_g_bl"),
-        max(when(!col("_from_base"), 1).otherwise(0)).as("_g_bs"))
-    val joined = events
-      .join(winners.hint("shuffle_hash"), Seq("doc_id"))
-      .filter(col("lsn") === col("_g_wl") &&
-        (col("_from_base") === (col("_g_wlb") <=> col("_g_wl"))))
-    val rowStruct = struct(
-      payloadCols.filterNot(_ == "doc_id").map(col) ++
-        Seq(col("lsn"), col("op"), col("_from_base")): _*)
-    val agged = joined
-      .groupBy(col("doc_id"))
-      .agg(
-        max_by(rowStruct, struct(col("lsn"), col("_from_base"))).as("_w"),
-        max(col("_g_bl")).as("_g_blf"),
-        max(col("_g_bs")).as("_g_bsf"))
-    val baseLive = col("_g_blf") === 1
-    val action =
-      when(col("_w._from_base"),
-        when(col("_g_bsf") === 1, lit("stale")).otherwise(lit("keep")))
-        .otherwise(when(col("_w.op") =!= "D",
-          when(baseLive, lit("update")).otherwise(lit("insert")))
-          .otherwise(when(baseLive, lit("delete")).otherwise(lit("delete_noop"))))
-    agged.select(
-      payloadFields.toIndexedSeq.map { f =>
-        if (f.name == "doc_id") col("doc_id")
-        else col(s"_w.${f.name}").as(f.name)
-      } ++
-        Seq(col("_w.lsn").as(LsnCol), (col("_w.op") === "D").as(Merge.TombCol)) ++
-        (if (classified) Seq(action.as(ActionCol)) else Seq.empty): _*)
-  }
-
-  /** [[resolveViaAgg]]'s winner-attach twin (A/B knob GRAFT_FOLD=wa;
-    * measured SLOWER than the one-pass agg on the 16M-event bench table
-    * — see OPTIMIZATION_r06.md — and kept only as the measured-off
-    * study variant, same discipline as Dedup.lwwSalted). */
-  private[graft] def resolveViaWinners(table: SnapshotTable, m: Manifest): DataFrame = {
-    val payloadFields =
-      m.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq
-    aggLwwViaWinners(
-      eventsFrame(table, m, m.files, m.deltaFiles), payloadFields,
-      classified = false)
-  }
-
 
   /** The authoritative LOGICAL view of a table (at a version): resolved
     * (base ∪ deltas, LWW), winning tombstones filtered, internal columns

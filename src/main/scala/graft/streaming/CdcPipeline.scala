@@ -50,12 +50,6 @@ case class PipelineConfig(
     // MOR's delta-write-then-fold double pass. An empty table makes any
     // non-empty first batch a bulk load (initial seed → COW).
     cowThreshold: Double = 0.5,
-    // COW physical merge plan: "" = Merge.defaultVariant ("join" unless
-    // overridden); "join" | "shj" | "fold" pins one of the
-    // equivalence-gated alternatives for this pipeline (per-pipeline and
-    // thread-safe, unlike the JVM-global GRAFT_MERGE/property channel
-    // that the same-JVM bench A/B uses)
-    mergeVariant: String = "",
     // deployment-specific validation rules composed into Validate's
     // reason array (each: Column → reason string | null), e.g.
     // graft.operators.Contamination.rule — failing rows route to
@@ -104,8 +98,6 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
   // modes; with three it must fail construction, not commits later
   require(Seq("cow", "mor", "auto").contains(cfg.mode),
     s"mode must be 'cow', 'mor' or 'auto'; got '${cfg.mode}'")
-  require(Seq("", "join", "shj", "fold").contains(cfg.mergeVariant),
-    s"mergeVariant must be '', 'join', 'shj' or 'fold'; got '${cfg.mergeVariant}'")
   require(Seq("off", "flag", "quarantine").contains(cfg.nearDupPolicy),
     s"nearDupPolicy must be 'off', 'flag' or 'quarantine'; got '${cfg.nearDupPolicy}'")
 
@@ -226,7 +218,7 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
             sc.setJobDescription(s"cdc $commitId compact")
             maybeCompact()
             s0
-          } else Merge(table, deduped, commitId, batchId, cfg.mergeVariant,
+          } else Merge(table, deduped, commitId, batchId,
             preCommitBarrier = barrier)
         sc.setJobDescription(s"cdc $commitId publish")
         publishErrors(awaitStagedErrors(), commitId)
@@ -308,8 +300,9 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     *  - index/roster appends happen HERE, before the merge commit —
     *    they are invisible to probes until the commitId enters the
     *    table's applied ledger, so a crash anywhere in between is healed
-    *    by the replay (duplicate nonce dirs collapse in the probe's
-    *    pair-distinct);
+    *    by the replay (a duplicate nonce dir only repeats candidate rows,
+    *    and the probe's per-doc `min_by` representative picks the same
+    *    earliest match with or without them);
     *  - the flags side dir is STAGED here and published after the
     *    commit, exactly the error-table contract ([[recoverSideTables]]
     *    completes a crashed publish on the ledger-skip path). */
@@ -600,9 +593,9 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     * driver query `q_cdc_bootstrap` shares `q_cdc_merge_state`'s oracle.
     *
     * The write path is [[graft.operators.Bootstrap]]: one bucket-key
-    * shuffle → bucketed parquet write → manifest commit. No join — the
-    * plan a 100-TB initial load needs (MERGE into an empty table pays a
-    * full-outer join against nothing).
+    * shuffle → bucketed parquet write → manifest commit. No LWW fold —
+    * the plan a 100-TB initial load needs (MERGE into an empty table
+    * pays a sort and fold against nothing).
     *
     * Snapshot contract: payload-shaped (`doc_id`, `tokens`[, `n_tok`,
     * `source`, extras]). `lsn`/`op` columns are REJECTED — a snapshot is
@@ -812,7 +805,7 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     val mainDir = ("/c-" + q + "(\\.[0-9a-f]+)?(\\.d)?(\\.[0-9a-f]+)?/").r
     val mainFiles = all.filter(f => mainDir.findFirstIn(f.path).isDefined)
     val mainB = mainFiles.map(_.bucket).toSet
-    // pre-compact files survive in the manifest only for buckets the join
+    // pre-compact files survive in the manifest only for buckets the merge
     // did not rewrite; attribute those to this batch too (its fold IO)
     val preDir = ("/c-" + q + "\\.pre-compact(\\.[0-9a-f]+)?/").r
     val commitFiles = mainFiles ++ all.filter(f =>

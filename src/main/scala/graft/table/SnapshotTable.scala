@@ -293,12 +293,10 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
     val routed =
       if (prePartitioned) df
       else SnapshotTable.routeByBucket(df, col("_bucket"), numBuckets)
-    val tW = System.nanoTime()
     routed
       .write.mode("overwrite")
       .partitionBy("_bucket")
       .parquet(dir.toString)
-    val tF = System.nanoTime()
     // Enumerate what was written; row counts from parquet footers, read
     // concurrently — serial footer opens were a measurable per-commit
     // driver-side fixed cost (numBuckets sequential file opens).
@@ -315,16 +313,13 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val out = Await.result(
+      Await.result(
         Future.traverse(paths) { case (f, bucket) =>
           Future {
             val (rows, minK, maxK) = parquetFooterStats(f)
             DataFile(f.toString, bucket, rows, minK, maxK)
           }
         }, Duration.Inf)
-      if (sys.env.contains("GRAFT_TIMING"))
-        System.err.println(f"[write] files=${out.size} job=${(tF - tW) / 1e9}%.2fs footers=${(System.nanoTime() - tF) / 1e9}%.2fs")
-      out
     }
   }
 
@@ -581,7 +576,7 @@ object SnapshotTable {
     * the bucket id, which is all any bucket-local consumer (the LWW
     * fold, partitionBy's per-bucket file split) needs. THE single
     * routing idiom — writeDataFiles, the MOR dirty-bucket fold, and the
-    * COW fold variant all route through here so the width formula can
+    * COW merge all route through here so the width formula can
     * never drift between the producer and `prePartitioned` consumers.
     * `bucketCol` must be an int column holding values in
     * [0, numBuckets). */

@@ -106,6 +106,39 @@ class DedupIndexSpec extends SparkSpec {
     assert(e.length == 1 && e.head.getAs[String]("dup_of") == "docA")
   }
 
+  test("crash-replay duplicate index dir leaves later probe flags unchanged") {
+    // A crash after the index append but before the merge commit leaves
+    // that commit's index dir behind; the replay writes the same rows
+    // again under a fresh nonce. Both dirs become ledger-visible once the
+    // replay commits, so every candidate pair repeats — the probe's
+    // per-doc min_by representative must pick the same match anyway.
+    val base = tmpDir("nd-crash")
+    val p = mkPipeline(base, "flag")
+    p.applyBatch(batch((1L, "I", "docA", toks(1)), (2L, "I", "docC", toks(2))), 0L)
+    p.applyBatch(batch((10L, "I", "docB", toks(2))), 1L)
+    val dir = java.nio.file.Paths.get(base, "neardups").toString
+    val later = DedupIndex.bandRows(batch(
+      (20L, "I", "docE", toks(1)),
+      (21L, "I", "docF", toks(2)),
+      (22L, "I", "docG", toks(7))).filter(col("op") === "I")).cache()
+    // a list, not a set: a repeated flag row must show
+    def flags() = DedupIndex.probe(spark, dir, p.table.appliedCommitIds, later)
+      .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    val before = flags()
+    assert(before.map(r => (r(0), r(2))) == Seq(("docE", "docA"), ("docF", "docC")),
+      s"fixture flags: $before")
+    val root = java.nio.file.Paths.get(dir, "index")
+    val orig = graft.table.Fs.listDir(root)
+      .find(d => DedupIndex.commitOf(d.getFileName.toString).contains("b0")).get
+    val twin = root.resolve(s"c-b0.${graft.table.Fs.nonce}")
+    java.nio.file.Files.walk(orig).forEach { src =>
+      java.nio.file.Files.copy(src, twin.resolve(orig.relativize(src).toString)); ()
+    }
+    assert(DedupIndex.commitDirCount(dir, p.table.appliedCommitIds) == 3)
+    assert(flags() == before)
+    later.unpersist()
+  }
+
   test("probe IO gate: only touched index buckets of applied commits are read") {
     val base = tmpDir("nd-io")
     val p = mkPipeline(base, "flag")

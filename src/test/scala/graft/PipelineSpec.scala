@@ -20,9 +20,7 @@ class PipelineSpec extends SparkSpec {
         source = r.getAs[String]("source"))
     }
 
-  private def mkPipeline(
-      base: String, mode: String = "cow",
-      mergeVariant: String = ""): CdcPipeline =
+  private def mkPipeline(base: String, mode: String = "cow"): CdcPipeline =
     new CdcPipeline(spark, PipelineConfig(
       tableRoot = s"$base/table",
       changeLogDir = s"$base/changelog",
@@ -30,8 +28,7 @@ class PipelineSpec extends SparkSpec {
       errorDir = s"$base/errors",
       lineageDir = s"$base/lineage",
       numBuckets = 8,
-      mode = mode,
-      mergeVariant = mergeVariant))
+      mode = mode))
 
   private def tableState(p: CdcPipeline): Map[String, OracleFold.Doc] =
     p.readTable().collect().map { r =>
@@ -95,9 +92,10 @@ class PipelineSpec extends SparkSpec {
     // the original-session base side, the write executes on the original
     // session and the batch observation's get() parks forever. Batch-mode
     // callers (MergeVariantSpec, the bench) share one session and can
-    // never catch this; only a real runAvailableNow drive does.
+    // never catch this; only a real runAvailableNow drive does. The fold
+    // is the only COW plan, so this drives the default pipeline.
     val base = tmpDir("e2e-fold")
-    val p    = mkPipeline(base, mergeVariant = "fold")
+    val p    = mkPipeline(base)
     CdcGenerator.writeBatches(spark, sf0001, s"$base/changelog", batches = 4)
     val stats = p.runAvailableNow(maxFilesPerTrigger = Some(1))
     assert(stats.size > 1, "expected multiple micro-batches")
@@ -105,9 +103,6 @@ class PipelineSpec extends SparkSpec {
     assert(stats.forall(s => s.skipped || s.batchEvents > 0),
       s"batch observation lost: ${stats.map(_.batchEvents)}")
     assertStateMatches(tableState(p), OracleFold.fold(collectEvents(sf0001)))
-    // a typo'd variant fails at construction, not mid-commit
-    intercept[IllegalArgumentException](
-      mkPipeline(tmpDir("e2e-fold-bad"), mergeVariant = "flod"))
   }
 
   test("merge-on-read replay matches the oracle; compaction preserves state") {
@@ -1007,10 +1002,6 @@ class PipelineSpec extends SparkSpec {
         coalesce(col(graft.operators.Merge.TombCol), lit(false)))
       .collect().map(_.toSeq).toSet
     assert(canon(MergeOnRead.resolveViaAgg(p.table, m)) ==
-      canon(MergeOnRead.resolve(p.table)))
-    // round-6 winner-attach fold: same ties/tombstones/replay cases, and
-    // the result must match BOTH prior folds exactly
-    assert(canon(MergeOnRead.resolveViaWinners(p.table, m)) ==
       canon(MergeOnRead.resolve(p.table)))
   }
 

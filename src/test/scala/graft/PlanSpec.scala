@@ -368,45 +368,64 @@ class PlanSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("AQE wraps the MERGE join inside foreachBatch (skew-join CAN fire)") {
-    // Settles the round-1 open question: Spark logs "adaptive.enabled is
-    // not supported in streaming DataFrames" per micro-batch, but that
-    // warning covers only the OUTER streaming plan — every job launched
-    // inside foreachBatch re-plans as a batch query. This gate asserts
-    // the merge's full-outer join actually executes under
-    // AdaptiveSparkPlanExec, so skewJoin.enabled applies to the hot path
-    // (Dedup's hot-key defense is max_by's map-side partial combine —
-    // measured in Bench.skewStudy; the salted path is an opt-in knob).
+  test("COW merge write inside foreachBatch: final AQE plan, one merge exchange, no join") {
+    // Spark logs "adaptive.enabled is not supported in streaming
+    // DataFrames" per micro-batch, but that warning covers only the OUTER
+    // streaming plan — every job launched inside foreachBatch re-plans as
+    // a batch query. This gate drives a real runAvailableNow and asserts,
+    // for every merge write, the final AQE plan of the one-path design:
+    // the merge adds exactly ONE exchange — the bucket route feeding the
+    // LWW run-fold, which the write reuses — and no join. The same plan
+    // also executes the batch's LWW dedup, whose doc_id shuffle is the
+    // only other exchange (the replaced join plan had three).
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.ingest.CdcGenerator
     import graft.streaming.{CdcPipeline, PipelineConfig}
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    object Walk extends AdaptiveSparkPlanHelper
+    val base = tmpDir("aqeprobe")
+    val dataDir = s"$base/table/data/c-"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(
           f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-        plans.add((qe.executedPlan.getClass.getSimpleName, qe.executedPlan.toString)); ()
+        if (qe.executedPlan.toString.contains(dataDir)) plans.add(qe.executedPlan); ()
       }
       override def onFailure(
           f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
-      val base = tmpDir("aqeprobe")
       val p = new CdcPipeline(spark, PipelineConfig(
         tableRoot = s"$base/table", changeLogDir = s"$base/changelog",
         checkpointDir = s"$base/checkpoint", errorDir = s"$base/errors",
         lineageDir = s"$base/lineage", numBuckets = 8, mode = "cow"))
       CdcGenerator.writeBatches(spark, sf0001, s"$base/changelog", batches = 2)
-      p.runAvailableNow()
-      // listener delivery is async — poll until the merge plans land
+      val stats = p.runAvailableNow()
+      val commits = stats.count(!_.skipped)
+      // listener delivery is async — poll until every commit's write lands
       import scala.collection.JavaConverters._
       val deadline = System.nanoTime() + 30L * 1000000000L
-      def captured() = plans.iterator().asScala.toSeq.filter(_._2.contains("FullOuter"))
-      while (captured().isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      val mergeWrites = captured()
-      assert(mergeWrites.nonEmpty, "no merge join captured by the listener")
-      assert(mergeWrites.forall(_._1 == "AdaptiveSparkPlanExec"),
-        s"merge join ran outside AQE: ${mergeWrites.map(_._1).distinct}")
-      assert(mergeWrites.forall(_._2.contains("isFinalPlan=true")))
+      while (plans.size < commits && System.nanoTime() < deadline) Thread.sleep(100)
+      val writes = plans.iterator().asScala.toSeq
+      assert(commits > 0 && writes.size == commits,
+        s"captured ${writes.size} merge writes for $commits commits")
+      writes.foreach { w =>
+        assert(w.isInstanceOf[AdaptiveSparkPlanExec], s"merge write ran outside AQE:\n$w")
+        assert(w.toString.contains("isFinalPlan=true"), s"AQE plan not final:\n$w")
+        val exchanges = Walk.collect(w) { case e: Exchange => e }
+        val (route, dedup) = exchanges.partition {
+          case s: ShuffleExchangeLike => s.shuffleOrigin == REPARTITION_BY_NUM
+          case _                      => false
+        }
+        assert(route.size == 1, s"expected one bucket-route exchange:\n$w")
+        assert(dedup.size == 1 &&
+          dedup.head.outputPartitioning.toString.startsWith("hashpartitioning(doc_id"),
+          s"expected only the dedup's doc_id exchange besides the route:\n$w")
+        assert(Walk.collect(w) { case j: BaseJoinExec => j }.isEmpty, s"merge write joins:\n$w")
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 

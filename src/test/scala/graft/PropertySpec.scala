@@ -263,7 +263,7 @@ class PropertySpec extends SparkSpec {
       evs.filter(OracleFold.valid).map(_.lsn).foldLeft(-1L)(math.max)
 
     var typedRefusals = 0
-    try (0 until 2).foreach { trial =>
+    (0 until 2).foreach { trial =>
       val rnd = new Random(987 + trial)
       // trial 1 under mode=auto: vacuum interleaves with per-batch
       // COW/MOR picks (COW folds pending deltas, changing which files
@@ -280,12 +280,6 @@ class PropertySpec extends SparkSpec {
         rnd.nextInt(6) match {
           case 0 | 1 if pending.nonEmpty =>
             val rows = pending.head; pending = pending.tail
-            // any COW pick inside mode=auto runs a seeded-random merge
-            // variant: the three physical plans must be interchangeable
-            // mid-history, not just on the clean fixtures of
-            // MergeVariantSpec (cleared in the finally below)
-            sys.props("graft.merge.variant") =
-              Seq("join", "shj", "fold")(rnd.nextInt(3))
             p.applyBatch(spark.createDataFrame(
               spark.sparkContext.parallelize(rows, 2), eventSchema), batchId)
             batchId += 1
@@ -351,7 +345,7 @@ class PropertySpec extends SparkSpec {
           s"trial $trial: state drift after rollback attempt to $v")
       }
       assert(p.table.currentVersion.get >= headV)
-    } finally sys.props.remove("graft.merge.variant")
+    }
     // the run must actually have exercised the reclaimed-history path,
     // or this test silently degrades to the vacuum-free state machine
     // above (the deterministic final compact+vacuum makes this robust
