@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Diagnostic (guide §7.2): dump optimized/physical plans of internal
   * engine frames the official queries exercise as side effects — the
-  * before/after plan evidence for `plans/r06/`. Not part of the frozen
+  * before/after plan evidence under `plans/`. Not part of the frozen
   * driver contract. Usage: runMain graft.PlanDump <what> [sfDir] */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -33,39 +33,27 @@ object PlanDump {
         println("==== NEW probe: select(_bucket).distinct ====")
         batch.select("_bucket").distinct().explain("formatted")
       case "dedup_probe" =>
-        // DedupIndex.probe representative pick, old (window) vs new
-        // (min_by agg) over the same candidate frame
-        import org.apache.spark.sql.expressions.Window
-        val inserts = graft.ingest.CdcGenerator.events(spark, sfDir)
-          .filter(col("op") === "I" && col("doc_id").isNotNull)
-        val bands = graft.operators.DedupIndex.bandRows(inserts)
-        val self = bands.select(col("doc_id").as("_i_doc"), col("lsn").as("_i_lsn"),
-          col("sig").as("_i_sig"), col("band"), col("key"))
-        val earlier = col("_i_lsn") < col("lsn") ||
-          (col("_i_lsn") === col("lsn") && col("_i_doc") < col("doc_id"))
-        val candRaw = bands.join(self, Seq("band", "key"))
-          .filter(col("_i_doc") =!= col("doc_id") && earlier)
-          .select(col("doc_id"), col("lsn"),
-            col("_i_doc").as("dup_of"), col("_i_lsn").as("dup_lsn"), lit(16).as("agree"))
-        val cand = candRaw.distinct()
-        println("==== OLD representative: row_number window ====")
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("dup_lsn"), col("dup_of"))
-        cand.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn").explain("formatted")
-        def rep(c: org.apache.spark.sql.DataFrame) = c.groupBy(col("doc_id"))
-          .agg(min_by(
-            struct(col("lsn"), col("dup_of"), col("dup_lsn"), col("agree")),
-            struct(col("dup_lsn"), col("dup_of"))).as("_m"))
-          .select(col("doc_id"), col("_m.lsn").as("lsn"),
-            col("_m.dup_of").as("dup_of"), col("_m.dup_lsn").as("dup_lsn"),
-            col("_m.agree").as("agree"))
-        println("==== NEW representative: min_by aggregate over distinct ====")
-        rep(cand).explain("formatted")
-        println("==== NEW2 representative: min_by, no pre-distinct (shipped) ====")
-        // duplicate multi-band pair rows carry identical (dup_lsn,
-        // dup_of, agree) — agree is a function of the pair's signatures
-        // — so the aggregate needs no collapsing pass of its own
-        rep(candRaw).explain("formatted")
+        // the near-dup probe as the flag-policy pipeline runs it: a batch
+        // of inserts against an index of two applied commits. The index
+        // scan's Location shows how its files were found.
+        import graft.operators.DedupIndex
+        import graft.streaming.{CdcPipeline, PipelineConfig}
+        val base = java.nio.file.Files.createTempDirectory("graft-plandump-dp")
+        try {
+          val p = new CdcPipeline(spark, PipelineConfig(
+            tableRoot = s"$base/table", changeLogDir = s"$base/unused",
+            checkpointDir = s"$base/ckpt", errorDir = s"$base/errors",
+            lineageDir = s"$base/lineage", numBuckets = 4, mode = "mor",
+            nearDupPolicy = "flag"))
+          val inserts = graft.ingest.CdcGenerator.events(spark, sfDir)
+            .filter(col("op") === "I" && col("doc_id").isNotNull)
+          p.applyBatch(inserts.filter(col("lsn") % 3 === 0), 0L)
+          p.applyBatch(inserts.filter(col("lsn") % 3 === 1), 1L)
+          val bands = DedupIndex.bandRows(inserts.filter(col("lsn") % 3 === 2))
+          println("==== near-dup probe over 2 applied index commits ====")
+          DedupIndex.probe(spark, s"$base/neardups", p.table.appliedCommitIds, bands)
+            .explain("formatted")
+        } finally graft.table.Fs.deleteRecursively(base)
       case "compact_fold" =>
         // the whole-table compaction fold, one-pass agg (compact's pick
         // when most buckets are dirty)

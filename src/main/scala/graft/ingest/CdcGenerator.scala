@@ -27,6 +27,16 @@ object CdcGenerator {
   val LsnStride = 10000000L
   val MaxReps   = 15 // 1 + max(id%3) + 12 hot-key extras
 
+  /** Replicated documents per generator partition before the explode —
+    * ~2.2 events each on average (up to [[MaxReps]]), so a partition
+    * stays under `MergeOnRead`'s 262144-rows-per-task fold unit. */
+  private val RowsPerPartition = 65536L
+
+  /** documents rows × replicate, from the parquet footers (no job). */
+  private def replicatedRows(sfDir: String, replicate: Int): Long =
+    graft.table.Fs.parquetRowCount(
+      java.nio.file.Paths.get(sfDir, "documents.parquet")) * replicate
+
   /** Number of change events per document id (Spark column expr). */
   private def repsCol = lit(1) + (col("doc_id") % 3) +
     when(col("doc_id") % 50 === 0, lit(12)).otherwise(lit(0))
@@ -51,8 +61,12 @@ object CdcGenerator {
         // every replica carries the same skew profile; identity is unique
         .withColumn("_rid", col("doc_id") * replicate + col("_k"))
         // documents is one small file → the whole crossJoin+explode chain
-        // would otherwise generate millions of events in ONE task
-        .repartition(spark.sparkContext.defaultParallelism)
+        // would otherwise generate millions of events in ONE task. Sized
+        // by rows, not cores: at 4 cores × 7.2M replicated docs a
+        // per-core partition carried ~4M events and staging died of heap
+        .repartition(math.max(spark.sparkContext.defaultParallelism,
+          ((replicatedRows(sfDir, replicate) + RowsPerPartition - 1) /
+            RowsPerPartition).toInt))
     val idCol = if (replicate == 1) col("doc_id") else col("_rid")
     val baseToks = Tokenize.tokens(col("text"))
     docs

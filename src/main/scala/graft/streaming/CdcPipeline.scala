@@ -454,12 +454,13 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
 
   // ---- exactly-once side tables ----
   // Error and lineage rows publish PER COMMIT under <dir>/c-<commitId>/
-  // via stage (hidden .staged-c-<id>-<nonce> dir, invisible to Spark's
-  // file listing) → atomic directory rename. Readers ([[readErrors]] /
-  // [[readLineage]]) see only published dirs, so no crash window yields
-  // duplicate rows (the round-2 defect: a blind append before the
-  // manifest commit re-ran on crash-replay → duplicated error rows;
-  // a crash after the commit lost the lineage row entirely):
+  // via stage (.staged-c-<id>-<nonce> dir, which [[readSideTable]]'s
+  // `c-` enumeration never admits) → atomic directory rename. Readers
+  // ([[readErrors]] / [[readLineage]]) see only published dirs, so no
+  // crash window yields duplicate rows (the round-2 defect: a blind
+  // append before the manifest commit re-ran on crash-replay →
+  // duplicated error rows; a crash after the commit lost the lineage
+  // row entirely):
   //  - crash after stage, before manifest commit → the replay re-runs
   //    the whole batch, stages + publishes fresh, sweeps the orphan;
   //  - crash after commit, before publish → the replay's ledger skip
@@ -969,19 +970,17 @@ object CdcPipeline {
   }
 
   /** Read a per-commit-published side table: only `c-<commitId>` dirs
-    * count (staged dot-dirs are invisible to Spark's listing anyway; the
-    * explicit enumeration also keeps stray root files out). Empty table
+    * count — the enumeration keeps staged `.staged-c-*` dirs, the
+    * `resolved` subdir and stray root files out. Each published dir is
+    * flat; [[graft.table.KnownFiles]] lists it driver-side (no Spark
+    * listing job) and skips its `_SUCCESS`/`.crc` sidecars. Empty table
     * → an empty frame with the declared schema. */
   def readSideTable(spark: SparkSession, root: String, schema: StructType): DataFrame = {
     val d = Paths.get(root)
-    val published: Seq[String] =
+    val published =
       if (!Files.isDirectory(d)) Seq.empty
       else graft.table.Fs.listDir(d)
         .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("c-"))
-        .map(_.toString)
-    if (published.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(published: _*)
+    graft.table.KnownFiles.read(spark, graft.table.KnownFiles.ofDirs(published), schema)
   }
 }

@@ -41,13 +41,13 @@ object Fs {
       .builder(new org.apache.parquet.conf.PlainParquetConfiguration())
       .build()
 
-  /** Total row count of every `*.parquet` file under `dir` (recursive),
-    * from footers, driver-side — ~0.1 ms/file, no Spark job. Used to
-    * decide emptiness AFTER a single write pass instead of paying a
-    * separate `isEmpty` scan job before it (guide §1/§2: one pass, not
-    * two). */
+  /** Total row count of every `*.parquet` file under `dir` (recursive;
+    * `dir` may also be one such file), from footers, driver-side —
+    * ~0.1 ms/file, no Spark job. Used to decide emptiness AFTER a single
+    * write pass instead of paying a separate `isEmpty` scan job before
+    * it (guide §1/§2: one pass, not two). */
   def parquetRowCount(dir: Path): Long = {
-    if (!Files.isDirectory(dir)) return 0L
+    if (!Files.exists(dir)) return 0L
     walkDir(dir)
       .filter(p => Files.isRegularFile(p) &&
         p.getFileName.toString.endsWith(".parquet"))

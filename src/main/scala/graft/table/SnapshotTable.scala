@@ -226,11 +226,12 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
 
   /** Read an explicit file list under an explicit schema. Older files may
     * predate a schema evolution; the explicit schema null-fills added
-    * columns and upcasts widened ones per file on read. */
+    * columns and upcasts widened ones per file on read. The manifest
+    * already names every file, so the read goes through [[KnownFiles]]
+    * (driver-side stat, no Spark listing job); a missing file fails here,
+    * when the frame is built. */
   def readFiles(files: Seq[DataFile], schema: StructType): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(_.path): _*)
+    KnownFiles.read(spark, KnownFiles.ofFiles(files.map(_.path)), schema)
 
   /** Untouched-bucket files carried forward into a child manifest. */
   def filesExcept(m: Manifest, buckets: Set[Int]): Seq[DataFile] =

@@ -8,12 +8,30 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * — the standard pattern for Spark-ecosystem libraries that compile
   * commands holding resolved sub-plans (a RunnableCommand's `run` gets
   * a session and a plan, and needs a public way back to Dataset-land).
-  * Nothing else of Spark's internals is touched here. */
+  * The other methods are the same kind of narrow way in to a
+  * `private[sql]`/`private[spark]` helper. */
 object GraftSqlBridge {
   def ofRows(
       session: org.apache.spark.sql.SparkSession,
       plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(session.asInstanceOf[SparkSession], plan)
+
+  /** A parquet scan over an explicit file index: the relation
+    * `spark.read.schema(dataSchema).parquet(..)` resolves to, with the
+    * caller's index in place of the listing `InMemoryFileIndex`. The
+    * schema goes in as-nullable exactly as `DataSource.resolveRelation`
+    * passes it (`StructType.asNullable` is `private[spark]`). */
+  def parquetScan(
+      session: org.apache.spark.sql.SparkSession,
+      location: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val relation = HadoopFsRelation(location,
+      new org.apache.spark.sql.types.StructType(), dataSchema.asNullable, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(session)
+    ofRows(session, LogicalRelation(relation))
+  }
 
   /** Flag a fully built batch frame as STREAMING for a V1 streaming
     * Source's `getBatch` (MicroBatchExecution requires the per-trigger

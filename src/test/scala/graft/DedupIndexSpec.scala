@@ -167,6 +167,101 @@ class DedupIndexSpec extends SparkSpec {
     val all = DedupIndex.indexPaths(
       dir, p.table.appliedCommitIds, (0 until DedupIndex.IndexBuckets).toSet)
     assert(paths.size <= all.size)
+    // the probe's executed scan reads exactly the leaf files under those
+    // paths: nothing from other buckets or unapplied commits, none missed
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Walk extends AdaptiveSparkPlanHelper
+    val probed = DedupIndex.probe(spark, dir, p.table.appliedCommitIds, bands)
+    probed.collect()
+    val scans = Walk.collect(probed.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1, s"probe scans: $scans")
+    val read = scans.head.relation.location.inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    val leaves = paths.flatMap(d => graft.table.Fs.listDir(java.nio.file.Paths.get(d)))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(_.toAbsolutePath.toString).toSet
+    assert(leaves.nonEmpty && read == leaves, s"scan read $read, index leaves $leaves")
+  }
+
+  test("engine-owned reads run no Spark listing job: probe, scans, changes, compaction, side tables") {
+    // Spark's file listing runs as a "Listing leaf files" job once a read
+    // names more than parallelPartitionDiscovery.threshold (32) paths.
+    // The fixture crosses that line where production does (a probe over
+    // 2 index commits × ~45 touched buckets, a table of ~100 files); the
+    // threshold is dropped to 0 for the recorded window so that a
+    // spark.read on ANY engine read path — side tables and the roster
+    // included, which hold a few dirs here — would surface as such a job.
+    import graft.operators.MergeOnRead
+    val base = tmpDir("nd-nolist")
+    val p = new CdcPipeline(spark, PipelineConfig(
+      tableRoot = s"$base/table", changeLogDir = s"$base/changelog",
+      checkpointDir = s"$base/checkpoint", errorDir = s"$base/errors",
+      lineageDir = s"$base/lineage", numBuckets = 64, mode = "mor",
+      compactThreshold = Double.PositiveInfinity, nearDupPolicy = "flag"))
+    def docs(from: Int, n: Int, lsn0: Long) =
+      (from until from + n).map(i => (lsn0 + i, "I", s"doc$i", toks(i)))
+    // an invalid row per batch (n_tok off by one) keeps errors published
+    def withInvalid(b: org.apache.spark.sql.DataFrame, lsn: Long) =
+      b.unionByName(Seq((lsn, "I", s"bad$lsn", Option(toks(1)), Option(0L), "s"))
+        .toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source"))
+    p.applyBatch(withInvalid(batch(docs(0, 120, 0L): _*), 999L), 0L)
+    // doc1000 copies doc0's tokens → flagged against the index
+    p.applyBatch(withInvalid(batch(
+      docs(120, 120, 1000L) :+ ((2000L, "I", "doc1000", toks(0))): _*), 2999L), 1L)
+    val v1 = p.table.currentVersion.get
+    val dir = java.nio.file.Paths.get(base, "neardups").toString
+    val probeBatch = batch(docs(240, 20, 3000L): _*)
+    val touched = DedupIndex.bandRows(probeBatch.filter(col("op") === "I"))
+      .select("_ibkt").distinct().as[Int].collect().toSet
+    val probePaths = DedupIndex.indexPaths(dir, p.table.appliedCommitIds, touched)
+    assert(probePaths.size > 32, s"probe reads ${probePaths.size} paths")
+    val m1 = p.table.current.get
+    assert(m1.files.size + m1.deltaFiles.size > 32,
+      s"table holds ${m1.files.size + m1.deltaFiles.size} files")
+
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(pr => Option(pr.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def recorded(body: => Unit): Seq[String] = {
+      descriptions.clear()
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      import scala.collection.JavaConverters._
+      descriptions.iterator().asScala.toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.conf.set(thresholdKey, "0")
+    try {
+      val jobs = recorded {
+        p.applyBatch(probeBatch, 2L)
+        spark.read.format("graft").load(s"$base/table").collect()
+        MergeOnRead.changesSince(p.table, v1).collect()
+        MergeOnRead.compact(p.table, "nolist-compact")
+        p.readErrors().collect()
+        val flags = p.readNearDups()
+        DedupIndex.appendRoster(flags, dir, "b1")
+        assert(DedupIndex.readRoster(spark, dir, p.table.appliedCommitIds).count() ==
+          flags.select("doc_id").distinct().count())
+        val applied = p.table.appliedCommitIds
+        assert(DedupIndex.compact(spark, dir, applied, p.table.current.get.commitId) == 3)
+      }
+      assert(jobs.size > 10, s"listener saw ${jobs.size} jobs")
+      val listing = jobs.filter(_.startsWith("Listing leaf files"))
+      assert(listing.isEmpty, s"Spark listing jobs: ${listing.mkString("\n")}")
+      // control: the same window catches a spark.read of an engine file
+      val control = recorded(spark.read.parquet(m1.deltaFiles.head.path).collect())
+      assert(control.exists(_.startsWith("Listing leaf files")), s"control jobs: $control")
+    } finally {
+      spark.conf.unset(thresholdKey)
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("index compaction folds applied dirs into one; probe results unchanged") {
