@@ -35,7 +35,8 @@ object PlanDump {
       case "dedup_probe" =>
         // the near-dup probe as the flag-policy pipeline runs it: a batch
         // of inserts against an index of two applied commits. The index
-        // scan's Location shows how its files were found.
+        // scan's Location shows the files it opens, its PushedFilters the
+        // `_ibkt` predicate that prunes them.
         import graft.operators.DedupIndex
         import graft.streaming.{CdcPipeline, PipelineConfig}
         val base = java.nio.file.Files.createTempDirectory("graft-plandump-dp")

@@ -2,12 +2,12 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.DedupOps
-import graft.table.KnownFiles
+import graft.table.{Fs, KnownFiles}
 
 /** Incremental (cross-batch) near-duplicate detection INSIDE the CDC
   * pipeline — round-4 verdict's #1 gap: every dedup operator was a
@@ -30,12 +30,18 @@ import graft.table.KnownFiles
   *    uses, so the DuckDB oracle regenerates them from the event log).
   *    The full signature rides along (16 longs ×4 band rows — bounded
   *    duplication that saves the probe a signature-lookup join).
-  *  - Physical layout: `<indexDir>/c-<commitId>.<nonce>/_ibkt=<b>/…`,
-  *    hash-partitioned on xxhash64(band, key) into `numBuckets` bucket
-  *    dirs. A probe reads ONLY the bucket dirs its batch's band keys
-  *    hash into — O(batch + touched index buckets), never the corpus
-  *    (PlanSpec-gated). The per-commit dir carries the writer nonce
-  *    (twin-process safety, like every data dir).
+  *  - Physical layout: `<indexDir>/c-<commitId>.<nonce>/part-*.parquet`,
+  *    one file per write task, rows sorted by the stored `_ibkt` column
+  *    (xxhash64(band, key) mod `numBuckets`). A probe opens the applied
+  *    commits' files with `_ibkt IN touched` pushed down to the parquet
+  *    footers and row-group statistics, so only the buckets its batch's
+  *    band keys hash into are decoded — O(batch + touched index data),
+  *    never the corpus. Index compaction range-partitions on `_ibkt`:
+  *    each compacted file spans a contiguous bucket range that a small
+  *    batch's probe skips whole by its footer. The per-commit dir
+  *    carries the writer nonce (twin-process safety, like every data
+  *    dir). A dir in the older `_ibkt=<b>/` sub-dir layout fails the
+  *    read loudly ([[KnownFiles.ofDirs]] rejects nested dirs).
   *  - Exactly-once WITHOUT its own ledger: index files are written
   *    BEFORE the merge commit, named by commitId, and readers admit
   *    only files whose commitId is in the TABLE's applied-commit ledger
@@ -71,9 +77,10 @@ object DedupIndex {
   /** Signature lanes that must agree — 12/16 ≈ estimated Jaccard 0.75. */
   val AgreeMin = 12
 
-  /** Index bucket count: the probe's IO unit. Sized so one bucket's
-    * rows fit an executor comfortably at the target corpus (rebucket =
-    * rewrite the index, same knob as the table's). */
+  /** Index bucket count: the unit the probe's `_ibkt` filter prunes by.
+    * Sized so one bucket's rows fit an executor comfortably at the
+    * target corpus (rebucket = rewrite the index, same knob as the
+    * table's). */
   val IndexBuckets = 64
 
   val IndexSchema: StructType = StructType(Seq(
@@ -81,7 +88,8 @@ object DedupIndex {
     StructField("lsn", LongType, nullable = false),
     StructField("sig", ArrayType(LongType), nullable = false),
     StructField("band", IntegerType, nullable = false),
-    StructField("key", LongType, nullable = false)))
+    StructField("key", LongType, nullable = false),
+    StructField("_ibkt", IntegerType, nullable = false)))
 
   val RosterSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
@@ -98,12 +106,9 @@ object DedupIndex {
     if (cut <= 0) None else Some(stem.substring(0, cut))
   }
 
-  private def bucketCol(band: Column, key: Column, numBuckets: Int): Column =
-    pmod(xxhash64(band, key), lit(numBuckets.toLong)).cast("int")
-
   /** Band rows (doc_id, lsn, sig, band, key, _ibkt) for a batch's valid
-    * inserts. Callers persist — the frame feeds the probe (twice: self
-    * arm + index arm), the touched-bucket collect, and the append. */
+    * inserts — exactly [[IndexSchema]]. Callers persist — the frame feeds
+    * the append and the probe (twice: self arm + index arm). */
   def bandRows(inserts: DataFrame, numBuckets: Int = IndexBuckets): DataFrame =
     inserts
       .select(col("doc_id"), col("lsn"),
@@ -113,31 +118,29 @@ object DedupIndex {
         explode(DedupOps.bandKeys(col("sig"))).as("bk"))
       .select(col("doc_id"), col("lsn"), col("sig"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-      .withColumn("_ibkt", bucketCol(col("band"), col("key"), numBuckets))
+      .withColumn("_ibkt",
+        pmod(xxhash64(col("band"), col("key")), lit(numBuckets.toLong)).cast("int"))
 
-  /** The exact directories a probe will read: applied commits' dirs ×
-    * touched `_ibkt=` subdirs — O(touched buckets × commits), never the
-    * whole index, never the corpus. Exposed for the IO gate in
-    * DedupIndexSpec (the probe reads THESE paths and nothing else). */
-  private[graft] def indexPaths(
-      dir: String, applied: Set[String], touched: Set[Int]): Seq[String] = {
-    val root = indexRoot(dir)
-    if (!Files.isDirectory(root) || touched.isEmpty) Seq.empty
-    else graft.table.Fs.listDir(root)
-      .filter(p => commitOf(p.getFileName.toString).exists(applied.contains))
-      .flatMap(p => touched.toSeq.sorted.map(b => p.resolve(s"_ibkt=$b")))
-      .filter(Files.isDirectory(_))
-      .map(_.toString)
-  }
+  /** `c-<id>.<nonce>` dirs under `root` whose commit is applied. */
+  private def appliedDirs(root: Path, applied: Set[String]): Seq[Path] =
+    if (!Files.isDirectory(root)) Seq.empty
+    else Fs.listDir(root).filter(p => commitOf(p.getFileName.toString).exists(applied.contains))
+
+  /** The applied commits' index dirs: every file a probe opens (one per
+    * commit's write task; the `_ibkt` filter then skips files and row
+    * groups outside the touched buckets by their statistics). Exposed
+    * for the IO gate in DedupIndexSpec. */
+  private[graft] def indexPaths(dir: String, applied: Set[String]): Seq[Path] =
+    appliedDirs(indexRoot(dir), applied)
 
   /** Ledger-visible index rows restricted to `touched` buckets. The
-    * driver lists the flat bucket dirs itself ([[KnownFiles]]), so a
-    * ~700-dir probe runs no Spark listing job. */
+    * driver lists the flat commit dirs itself ([[KnownFiles]]), so the
+    * probe runs no Spark listing job. */
   private def readIndex(
       spark: SparkSession, dir: String, applied: Set[String],
       touched: Set[Int]): DataFrame =
-    KnownFiles.read(spark,
-      KnownFiles.ofDirs(indexPaths(dir, applied, touched).map(Paths.get(_))), IndexSchema)
+    KnownFiles.read(spark, KnownFiles.ofDirs(indexPaths(dir, applied)), IndexSchema)
+      .filter(col("_ibkt").isin(touched.toSeq.sorted: _*))
 
   /** Lanes of exact agreement between two 16-lane signatures. */
   private def sigAgree(a: Column, b: Column): Column =
@@ -153,12 +156,11 @@ object DedupIndex {
     * @param bands persisted [[bandRows]] of the batch */
   def probe(
       spark: SparkSession, dir: String, applied: Set[String],
-      bands: DataFrame, numBuckets: Int = IndexBuckets,
-      agreeMin: Int = AgreeMin,
+      bands: DataFrame, agreeMin: Int = AgreeMin,
       touchedHint: Option[Set[Int]] = None): DataFrame = {
     // touched buckets: bounded driver collect (≤ numBuckets ints — the
     // same exact-probe class as the merge's touched-bucket collect);
-    // callers that already collected it pass the hint so the persisted
+    // the pipeline passes the set its append observed, so the persisted
     // bands frame is scanned once, not twice
     val touched = touchedHint.getOrElse(
       bands.select(col("_ibkt")).distinct()
@@ -203,43 +205,29 @@ object DedupIndex {
   }
 
   /** Append a batch's band rows to the index under its commitId (call
-    * BEFORE the merge commit — see the exactly-once contract above).
-    * Returns the written dir (the caller deletes it if the batch ends
-    * up whole-rejecting under a ledgered commit). */
+    * BEFORE the merge commit — see the exactly-once contract above):
+    * one file per write task, rows sorted by `_ibkt`, no exchange.
+    * Returns the written dir and the batch's touched-bucket set,
+    * observed on that same write — no job of its own; empty ⟺ the batch
+    * had no valid inserts (the caller then deletes the dir). */
   def append(
-      bands: DataFrame, dir: String, commitId: String): Path = {
-    val out = indexRoot(dir).resolve(s"c-$commitId.${graft.table.Fs.nonce}")
-    // partitionBy splits each task's output per bucket; the batch is
-    // micro-batch-sized, so no routing exchange is worth its cost here
-    bands.write.mode("overwrite").partitionBy("_ibkt").parquet(out.toString)
-    out
+      bands: DataFrame, dir: String, commitId: String): (Path, Set[Int]) = {
+    val out = indexRoot(dir).resolve(s"c-$commitId.${Fs.nonce}")
+    val obs = Observation(s"ibkt-$commitId")
+    bands.observe(obs, collect_set(col("_ibkt")).as("touched"))
+      .sortWithinPartitions("_ibkt")
+      .write.mode("overwrite").parquet(out.toString)
+    (out, obs.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet)
   }
 
-  /** The `_ibkt=` bucket ids a written [[append]] dir holds — the
-    * batch's touched-bucket set, read from the directory names
-    * driver-side (round-6: replaces the separate distinct+collect Spark
-    * job per batch; empty ⟺ the batch had no valid inserts). */
-  def bucketsOf(appendDir: Path): Set[Int] =
-    if (!Files.isDirectory(appendDir)) Set.empty
-    else graft.table.Fs.listDir(appendDir)
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("_ibkt="))
-      .map(_.stripPrefix("_ibkt=").toInt)
-      .toSet
-
-  /** Commit-dir count at which the pipeline folds the index — keeps the
-    * probe's per-batch path count (commit dirs × touched buckets, each
-    * listed and its files stat'ed driver-side) bounded over a long
-    * stream. */
+  /** Commit-dir count at which the pipeline folds the index — bounds the
+    * probe at this many commit dirs' files plus the compacted base over
+    * a long stream. */
   val CompactAt = 64
 
   /** Applied-commit index dirs currently on disk. */
-  def commitDirCount(dir: String, applied: Set[String]): Int = {
-    val root = indexRoot(dir)
-    if (!Files.isDirectory(root)) 0
-    else graft.table.Fs.listDir(root)
-      .count(p => commitOf(p.getFileName.toString).exists(applied.contains))
-  }
+  def commitDirCount(dir: String, applied: Set[String]): Int =
+    indexPaths(dir, applied).size
 
   /** Fold every applied commit's index dir into ONE dir keyed by
     * `intoCommitId` (which MUST already be in the applied ledger, so
@@ -251,28 +239,30 @@ object DedupIndex {
     * them. Returns dirs folded. */
   def compact(
       spark: SparkSession, dir: String, applied: Set[String],
-      intoCommitId: String, numBuckets: Int = IndexBuckets): Int = {
+      intoCommitId: String): Int = {
     require(applied.contains(intoCommitId),
       s"index compaction target '$intoCommitId' is not an applied commit")
-    val root = indexRoot(dir)
-    if (!Files.isDirectory(root)) return 0
-    val olds = graft.table.Fs.listDir(root)
-      .filter(p => commitOf(p.getFileName.toString).exists(applied.contains))
+    val olds = indexPaths(dir, applied)
     if (olds.size <= 1) return 0
-    // read the leaf bucket dirs directly (the probe's own read shape) —
-    // pointing Spark at the mixed commit roots trips partition-discovery
-    // conflicts across their differing dir names
-    val bucketDirs = olds.flatMap(o => graft.table.Fs.listDir(o)
-      .filter(_.getFileName.toString.startsWith("_ibkt=")))
-    if (bucketDirs.isEmpty) return 0
-    val rows = KnownFiles.read(spark, KnownFiles.ofDirs(bucketDirs), IndexSchema)
-      .distinct()
-      .withColumn("_ibkt", bucketCol(col("band"), col("key"), numBuckets))
-    val out = root.resolve(s"c-$intoCommitId.${graft.table.Fs.nonce}")
-    rows.write.mode("overwrite").partitionBy("_ibkt").parquet(out.toString)
-    olds.foreach(graft.table.Fs.deleteRecursively)
+    val out = indexRoot(dir).resolve(s"c-$intoCommitId.${Fs.nonce}")
+    // ONE exchange: range partitioning on `_ibkt` already clusters what
+    // distinct needs, and it gives each output file a contiguous bucket
+    // range — the footer statistics a small batch's probe skips it by
+    KnownFiles.read(spark, KnownFiles.ofDirs(olds), IndexSchema)
+      .repartitionByRange(col("_ibkt")).distinct().sortWithinPartitions("_ibkt")
+      .write.mode("overwrite").parquet(out.toString)
+    olds.foreach(Fs.deleteRecursively)
     olds.size
   }
+
+  /** Delete a commit's index and roster dirs by name: a batch that
+    * whole-rejects under a ledgered commitId must leave none, whatever
+    * its near-dup stage recorded before it finished or failed. */
+  def discard(dir: String, commitId: String): Unit =
+    Seq(indexRoot(dir), rosterRoot(dir)).filter(Files.isDirectory(_))
+      .flatMap(Fs.listDir)
+      .filter(p => commitOf(p.getFileName.toString).contains(commitId))
+      .foreach(Fs.deleteRecursively)
 
   /** Append flagged docs to the quarantine roster (quarantine policy).
     * Returns the written dir. */
@@ -280,7 +270,7 @@ object DedupIndex {
       flagged: DataFrame, dir: String, commitId: String): Path = {
     val root = rosterRoot(dir)
     Files.createDirectories(root)
-    val out = root.resolve(s"c-$commitId.${graft.table.Fs.nonce}")
+    val out = root.resolve(s"c-$commitId.${Fs.nonce}")
     flagged.select(col("doc_id"), col("dup_of")).coalesce(1)
       .write.mode("overwrite").parquet(out.toString)
     out
@@ -289,12 +279,7 @@ object DedupIndex {
   /** Ledger-visible quarantine roster (doc_id, dup_of), deduped. */
   def readRoster(
       spark: SparkSession, dir: String, applied: Set[String]): DataFrame = {
-    val root = rosterRoot(dir)
-    val dirs =
-      if (!Files.isDirectory(root)) Seq.empty
-      else graft.table.Fs.listDir(root)
-        .filter(p => commitOf(p.getFileName.toString).exists(applied.contains))
-    KnownFiles.read(spark, KnownFiles.ofDirs(dirs), RosterSchema)
+    KnownFiles.read(spark, KnownFiles.ofDirs(appliedDirs(rosterRoot(dir), applied)), RosterSchema)
       .groupBy(col("doc_id")).agg(min(col("dup_of")).as("dup_of"))
   }
 }

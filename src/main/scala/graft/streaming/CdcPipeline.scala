@@ -124,7 +124,8 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
   def applyBatch(raw: DataFrame, batchId: Long): MergeStats =
     applyRaw(raw, commitIdFor(batchId), batchId)
 
-  private def applyRaw(raw: DataFrame, commitId: String, batchId: Long): MergeStats = {
+  private def applyRaw(batch: DataFrame, commitId: String, batchId: Long): MergeStats = {
+    val raw = CdcPipeline.inTasks(batch)
     if (table.appliedCommitIds.contains(commitId)) {
       // exactly-once for the SIDE tables too: a crash between the
       // manifest commit and side-table publication leaves a staged error
@@ -167,11 +168,22 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
       nearDupF = None
       nearDup
     }
-    // reject/teardown paths: a failed stage future has nothing recorded
-    // to discard — fall back to the last known outcome
+    // reject/teardown paths: a failed stage future has no outcome — fall
+    // back to the last known one
     def nearDupQuiet(): NearDupOutcome =
       try awaitNearDup()
       catch { case scala.util.control.NonFatal(_) => nearDupF = None; nearDup }
+    // whole-batch reject: join the stage, then sweep the commit's near-dup
+    // artifacts BY NAME before rejectBatch ledgers it — its index rows
+    // would become ledger-visible for docs that never merged, and a stage
+    // that failed after its index append recorded nothing to discard
+    def discardNearDup(): Unit = {
+      nearDupQuiet()
+      if (cfg.nearDupPolicy != "off") {
+        graft.operators.DedupIndex.discard(nearDupRoot, commitId)
+        stagedDirsFor(nearDupRoot, commitId).foreach(deleteRecursively)
+      }
+    }
     // Job labels (guide §1.5): every job this batch launches is tagged
     // with its phase so the UI / BenchExtra profile reads per-phase.
     // Descriptions are thread-local — the staging future labels its own.
@@ -231,18 +243,16 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
         // staged-errors await in each arm re-raises a staging failure
         // instead of ledgering the reject — same outcome as when the
         // inline staging failed before the merge ever ran. The near-dup
-        // await in each arm is quiet: a FAILED stage future has nothing
-        // recorded to discard, while a completed one must be discarded
-        // before rejectBatch ledgers the commitId (its index rows would
-        // become ledger-visible for docs that never merged).
+        // stage is joined quietly and its artifacts swept by name
+        // (discardNearDup), whether its future completed or failed.
         case Conform.BatchRejected(missing) =>
-          nearDupQuiet().discard()
+          discardNearDup()
           rejectBatch(raw, commitId, batchId,
             s"missing_required_column:${missing.mkString(",")}", awaitStagedErrors())
         case SchemaEvolution.Incompatible(msg) =>
           // extra column re-appeared with a non-widenable type — thrown
           // from the merge, i.e. AFTER the near-dup stage ran/launched
-          nearDupQuiet().discard()
+          discardNearDup()
           rejectBatch(raw, commitId, batchId, s"schema_incompatible:$msg",
             awaitStagedErrors())
         case Conform.ConformFailed(detail) =>
@@ -251,7 +261,7 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
           // environment-caused analysis error (vacuumed data file, bad
           // errorDir path) must fail the stream, not ledger the batch as
           // applied with only a sample retained.
-          nearDupQuiet().discard()
+          discardNearDup()
           rejectBatch(raw, commitId, batchId, s"conform_failed:$detail",
             awaitStagedErrors())
         case e: Throwable =>
@@ -276,22 +286,16 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
   /** What the near-dup stage hands back to the apply path: the events
     * that should proceed to merge (quarantine removes flagged docs'),
     * extra error rows (quarantined events), the staged flags dir
-    * (published post-commit), the written index/roster dirs (discarded
-    * if the batch whole-rejects), and the persisted frames to release. */
+    * (published post-commit), and the persisted frames to release. */
   private case class NearDupOutcome(
       events: DataFrame,
       extraErrors: Option[DataFrame],
       stagedFlags: Option[java.nio.file.Path],
-      written: Seq[java.nio.file.Path],
       persisted: Seq[DataFrame]) {
-    def discard(): Unit = {
-      (written ++ stagedFlags).foreach(graft.table.Fs.deleteRecursively)
-    }
     def unpersist(): Unit = persisted.foreach { df => df.unpersist(); () }
   }
   private object NearDupOutcome {
-    def off(events: DataFrame): NearDupOutcome =
-      NearDupOutcome(events, None, None, Seq.empty, Seq.empty)
+    def off(events: DataFrame): NearDupOutcome = NearDupOutcome(events, None, None, Seq.empty)
   }
 
   /** Probe the arriving batch's valid inserts against the persisted
@@ -329,39 +333,35 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     // 2. index + probe this batch's inserts. The APPEND runs FIRST and
     // is the batch's ONE materialization job: it writes the band rows
     // under the commit's (not-yet-applied, hence probe-invisible) index
-    // dir while populating the persisted frame, and the written `_ibkt=`
-    // dir names ARE the touched-bucket set and the empty-batch check —
-    // read driver-side for free. The separate distinct+collect job per
-    // batch is gone (round-6; guide §1.2 — remove passes). EVERY valid
-    // insert is indexed, flagged or not — the non-recursive match rule
-    // the oracle replays (DedupIndex scaladoc).
+    // dir while populating the persisted frame, and an Observation on
+    // that same write yields the touched-bucket set and the empty-batch
+    // check — no distinct+collect job of its own (guide §1.2 — remove
+    // passes). EVERY valid insert is indexed, flagged or not — the
+    // non-recursive match rule the oracle replays (DedupIndex scaladoc).
     val inserts = events1.filter(col("op") === "I" && col("doc_id").isNotNull)
     val bands = DedupIndex.bandRows(inserts, cfg.nearDupIndexBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxDir  = DedupIndex.append(bands, nearDupRoot, commitId)
-    val touched = DedupIndex.bucketsOf(idxDir)
+    val (idxDir, touched) = DedupIndex.append(bands, nearDupRoot, commitId)
     if (touched.isEmpty) { // update/delete-only batch: nothing indexed
       graft.table.Fs.deleteRecursively(idxDir) // keep such batches dir-free
       bands.unpersist()
-      return NearDupOutcome(events1, rosterErrs, None, Seq.empty, Seq.empty)
+      return NearDupOutcome(events1, rosterErrs, None, Seq.empty)
     }
     // under "flag" the probe result has exactly ONE consumer (the staged
     // flag rows) — persisting it would only add a cache write; under
     // "quarantine" it feeds the roster append and two joins, so pin it
-    val flags0 = DedupIndex.probe(spark, nearDupRoot, applied, bands,
-      cfg.nearDupIndexBuckets, cfg.nearDupAgreeMin, Some(touched))
+    val flags0 = DedupIndex.probe(
+      spark, nearDupRoot, applied, bands, cfg.nearDupAgreeMin, Some(touched))
     val flags =
       if (cfg.nearDupPolicy == "flag") flags0
       else flags0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wrote = scala.collection.mutable.ArrayBuffer(idxDir)
-    // keep the probe's per-batch dir listing bounded: fold applied
+    // keep the probe's per-batch file count bounded: fold applied
     // commits' index dirs once they pile up (the folded dir keys under
     // the current HEAD's commitId — already applied, so visibility is
     // unchanged; this batch's own dir is not yet applied and stays out)
     if (DedupIndex.commitDirCount(nearDupRoot, applied) >= DedupIndex.CompactAt)
       table.current.foreach { head =>
-        DedupIndex.compact(
-          spark, nearDupRoot, applied, head.commitId, cfg.nearDupIndexBuckets)
+        DedupIndex.compact(spark, nearDupRoot, applied, head.commitId)
         ()
       }
     val flagRows = flags.select(
@@ -370,15 +370,15 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     val stagedFlags = stageSide(flagRows, nearDupRoot, commitId)
     val persisted = Seq(bands, flags)
     if (cfg.nearDupPolicy == "flag")
-      NearDupOutcome(events1, rosterErrs, stagedFlags, wrote.toSeq, persisted)
+      NearDupOutcome(events1, rosterErrs, stagedFlags, persisted)
     else {
-      wrote += DedupIndex.appendRoster(flags, nearDupRoot, commitId)
+      DedupIndex.appendRoster(flags, nearDupRoot, commitId)
       val f = flags.select(col("doc_id").as("_f_doc"), col("dup_of").as("_f_dup"))
       val flaggedEvents = events1.join(f, col("doc_id") === col("_f_doc"))
       val errs = errRows(flaggedEvents, col("_f_dup"))
       val remaining = events1.join(f, col("doc_id") === col("_f_doc"), "left_anti")
       val allErrs = rosterErrs.map(_.unionByName(errs)).getOrElse(errs)
-      NearDupOutcome(remaining, Some(allErrs), stagedFlags, wrote.toSeq, persisted)
+      NearDupOutcome(remaining, Some(allErrs), stagedFlags, persisted)
     }
   }
 
@@ -916,6 +916,21 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
 }
 
 object CdcPipeline {
+  /** A driver-local batch (a `LocalRelation`, as tests and local
+    * DataFrames build) rebound to its RDD, so Validate's and the extra
+    * rules' expressions evaluate in tasks. Left local, the optimizer
+    * folds them on the driver (`ConvertToLocalRelation`) in every plan
+    * the batch feeds, and the apply path plans those concurrently (error
+    * staging, the near-dup stage, the merge): lambda functions keep
+    * their loop variable, and `to_json` its generator, in the expression
+    * instance those plans share, so a row could land on the wrong side
+    * or a plan fail. Other batches pass through. */
+  private[graft] def inTasks(batch: DataFrame): DataFrame =
+    if (batch.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+      org.apache.spark.sql.classic.GraftSqlBridge.asBatch(batch)
+    else batch
+
   /** Resolutions live in a subdirectory of the error dir whose name does
     * NOT match the `c-*` published-commit pattern, so [[readSideTable]]
     * over the error root never globs them in. */

@@ -62,7 +62,9 @@ object GraftSqlBridge {
     * the `ForeachBatchSink` idiom. The sink's write path runs several
     * actions over the frame (cardinality probe, classification join,
     * bucket write); a streaming-flagged plan rejects any new action with
-    * "streaming sources must be executed with writeStream.start()". */
+    * "streaming sources must be executed with writeStream.start()".
+    * [[graft.streaming.CdcPipeline.inTasks]] uses the same rebind to move
+    * a driver-local batch's evaluation into tasks. */
   def asBatch(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     Dataset.ofRows(ds.sparkSession,

@@ -147,32 +147,32 @@ class DedupIndexSpec extends SparkSpec {
       (2L, "I", "docB", toks(2)),
       (3L, "I", "docC", toks(3)),
       (4L, "I", "docD", toks(4))), 0L)
+    p.applyBatch(batch((5L, "I", "docE", toks(5))), 1L)
     val dir = java.nio.file.Paths.get(base, "neardups").toString
-    // the probe for a single-doc batch touches ≤ numBands buckets; the
-    // path list must cover exactly (applied commits × touched buckets),
-    // never the index's full bucket fan
+    val applied = p.table.appliedCommitIds
+    // a ghost commit's index dir (never ledgered) sits beside the applied ones
+    val root = java.nio.file.Paths.get(dir, "index")
+    val orig = graft.table.Fs.listDir(root).head
+    val ghostDir = root.resolve(s"c-ghost.${graft.table.Fs.nonce}")
+    java.nio.file.Files.walk(orig).forEach { src =>
+      java.nio.file.Files.copy(src, ghostDir.resolve(orig.relativize(src).toString)); ()
+    }
+    val paths = DedupIndex.indexPaths(dir, applied)
+    assert(paths.flatMap(d => DedupIndex.commitOf(d.getFileName.toString)).sorted ==
+      Seq("b0", "b1"), s"probe dirs: $paths")
+    assert(DedupIndex.indexPaths(dir, Set("no-such-commit")).isEmpty)
+    // the probe for a single-doc batch touches ≤ numBands buckets, and
+    // the scan carries exactly that bucket predicate to the parquet reader
     val bands = DedupIndex.bandRows(
       batch((9L, "I", "docQ", toks(1))).filter(col("op") === "I"))
     val touched = bands.select("_ibkt").distinct().as[Int].collect().toSet
     assert(touched.size <= graft.functions.DedupOps.NumHashes / graft.functions.DedupOps.BandSize)
-    val paths = DedupIndex.indexPaths(dir, p.table.appliedCommitIds, touched)
-    assert(paths.nonEmpty)
-    assert(paths.forall(pth => touched.exists(b => pth.endsWith(s"_ibkt=$b"))),
-      s"probe path outside touched buckets: $paths")
-    // an index dir whose commit is NOT in the ledger is invisible
-    val ghost = DedupIndex.indexPaths(dir, Set("no-such-commit"), touched)
-    assert(ghost.isEmpty)
-    // and the all-buckets fan is strictly larger than the probe's slice
-    // whenever the batch misses buckets (sanity that pruning is real)
-    val all = DedupIndex.indexPaths(
-      dir, p.table.appliedCommitIds, (0 until DedupIndex.IndexBuckets).toSet)
-    assert(paths.size <= all.size)
-    // the probe's executed scan reads exactly the leaf files under those
-    // paths: nothing from other buckets or unapplied commits, none missed
+    // the probe's executed scan reads exactly the data files of the
+    // applied commits' dirs: nothing from the ghost, none missed
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     object Walk extends AdaptiveSparkPlanHelper
-    val probed = DedupIndex.probe(spark, dir, p.table.appliedCommitIds, bands)
+    val probed = DedupIndex.probe(spark, dir, applied, bands)
     probed.collect()
     val scans = Walk.collect(probed.queryExecution.executedPlan) {
       case s: FileSourceScanExec => s
@@ -180,20 +180,115 @@ class DedupIndexSpec extends SparkSpec {
     assert(scans.size == 1, s"probe scans: $scans")
     val read = scans.head.relation.location.inputFiles
       .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
-    val leaves = paths.flatMap(d => graft.table.Fs.listDir(java.nio.file.Paths.get(d)))
+    val leaves = paths.flatMap(graft.table.Fs.listDir)
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(_.toAbsolutePath.toString).toSet
     assert(leaves.nonEmpty && read == leaves, s"scan read $read, index leaves $leaves")
+    assert(!read.exists(_.contains("c-ghost.")), s"ghost commit read: $read")
+    val bucketFilter = scans.head.dataFilters.filter(_.references.exists(_.name == "_ibkt"))
+    assert(bucketFilter.nonEmpty, s"data filters: ${scans.head.dataFilters}")
+    assert(touched.forall(b => bucketFilter.exists(_.sql.contains(b.toString))),
+      s"bucket filter $bucketFilter misses touched buckets $touched")
+    assert(scans.head.metadata("PushedFilters").contains("_ibkt"),
+      s"pushed: ${scans.head.metadata("PushedFilters")}")
+  }
+
+  test("compacted index files span bucket ranges: a single-doc probe skips rows, flags unchanged") {
+    val base = tmpDir("nd-prune")
+    val p = mkPipeline(base, "flag")
+    (0 until 3).foreach { b =>
+      p.applyBatch(batch((0 until 40).map(i =>
+        (b * 100L + i, "I", s"doc${b * 40 + i}", toks(b * 40 + i))): _*), b.toLong)
+    }
+    val dir = java.nio.file.Paths.get(base, "neardups").toString
+    val applied = p.table.appliedCommitIds
+    // 16 range partitions kept apart (no AQE coalescing) so the fixture's
+    // small index still compacts into several files
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "16")
+    spark.conf.set(keys(1), "false")
+    try assert(DedupIndex.compact(spark, dir, applied, p.table.current.get.commitId) == 3)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+    val files = DedupIndex.indexPaths(dir, applied).flatMap(graft.table.Fs.listDir)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(files.size >= 2, s"compacted files: $files")
+    val indexRows = graft.table.KnownFiles.read(spark,
+      graft.table.KnownFiles.ofDirs(DedupIndex.indexPaths(dir, applied)), DedupIndex.IndexSchema)
+      .count()
+    assert(indexRows == 3 * 40 * 4)
+    // docQ copies doc57's content → flagged against the compacted base
+    val bands = DedupIndex.bandRows(
+      batch((9000L, "I", "docQ", toks(57))).filter(col("op") === "I")).cache()
+    def flags(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Walk extends AdaptiveSparkPlanHelper
+    val probed = DedupIndex.probe(spark, dir, applied, bands)
+    val got = flags(probed)
+    assert(got.map(r => (r(0), r(2))) == Seq(("docQ", "doc57")), s"flags: $got")
+    val scans = Walk.collect(probed.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1, s"probe scans: $scans")
+    val scanned = scans.head.metrics("numOutputRows").value
+    assert(scanned < indexRows, s"probe scanned $scanned of $indexRows index rows")
+    // every bucket "touched" = an unfiltered read: same flags
+    val unfiltered = DedupIndex.probe(spark, dir, applied, bands,
+      touchedHint = Some((0 until DedupIndex.IndexBuckets).toSet))
+    assert(flags(unfiltered) == got)
+    bands.unpersist()
+  }
+
+  test("layout gate: a one-partition flag batch writes exactly one bucket-sorted index file") {
+    val base = tmpDir("nd-layout")
+    val p = mkPipeline(base, "flag")
+    p.applyBatch(batch((0 until 30).map(i => (i.toLong, "I", s"doc$i", toks(i))): _*)
+      .coalesce(1), 0L)
+    val dir = java.nio.file.Paths.get(base, "neardups").toString
+    val dirs = DedupIndex.indexPaths(dir, p.table.appliedCommitIds)
+    val files = dirs.flatMap(graft.table.Fs.listDir)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(dirs.size == 1 && files.size == 1, s"index files: $files")
+    val buckets = spark.read.parquet(files.head.toString).select("_ibkt").as[Int].collect().toSeq
+    assert(buckets.size == 30 * 4 && buckets == buckets.sorted, "rows not sorted by _ibkt")
+  }
+
+  test("whole-batch reject after a failed near-dup stage leaves none of its commit's index") {
+    // The flag-policy stage runs beside the merge. Here its append lands,
+    // then its probe fails on an unreadable applied index file, while the
+    // merge rejects the batch (non-widenable schema change): the reject
+    // ledgers the commit, so its index dir must go, or docB's band rows
+    // would become probe-visible for a doc that never merged.
+    val base = tmpDir("nd-reject")
+    val p = mkPipeline(base, "flag")
+    def withUpstream(doc: String, lsn: Long, up: org.apache.spark.sql.Column) =
+      batch((lsn, "I", doc, toks(1))).withColumn("upstream", up)
+    p.applyBatch(withUpstream("docA", 1L, lit(7)), 0L)
+    val root = java.nio.file.Paths.get(base, "neardups")
+    graft.table.Fs.walkDir(root.resolve("index"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.write(f, "not parquet".getBytes("UTF-8")))
+    val s1 = p.applyBatch(withUpstream("docB", 10L, lit("oops")), 1L)
+    assert(s1.schemaChanges.exists(_.contains("schema_incompatible")), s1.schemaChanges)
+    assert(p.table.appliedCommitIds.contains("b1"))
+    val left = graft.table.Fs.walkDir(root).map(_.getFileName.toString)
+      .filter(n => n.startsWith("c-b1") || n.startsWith(".staged-c-b1-"))
+    assert(left.isEmpty, s"near-dup state of the rejected commit: $left")
   }
 
   test("engine-owned reads run no Spark listing job: probe, scans, changes, compaction, side tables") {
     // Spark's file listing runs as a "Listing leaf files" job once a read
     // names more than parallelPartitionDiscovery.threshold (32) paths.
-    // The fixture crosses that line where production does (a probe over
-    // 2 index commits × ~45 touched buckets, a table of ~100 files); the
-    // threshold is dropped to 0 for the recorded window so that a
-    // spark.read on ANY engine read path — side tables and the roster
-    // included, which hold a few dirs here — would surface as such a job.
+    // The table fixture crosses that line where production does (~100
+    // files); the threshold is dropped to 0 for the recorded window so
+    // that a spark.read on ANY engine read path — the probe over 2 index
+    // commits, side tables and the roster included, which hold a few
+    // dirs here — would surface as such a job.
     import graft.operators.MergeOnRead
     val base = tmpDir("nd-nolist")
     val p = new CdcPipeline(spark, PipelineConfig(
@@ -214,10 +309,7 @@ class DedupIndexSpec extends SparkSpec {
     val v1 = p.table.currentVersion.get
     val dir = java.nio.file.Paths.get(base, "neardups").toString
     val probeBatch = batch(docs(240, 20, 3000L): _*)
-    val touched = DedupIndex.bandRows(probeBatch.filter(col("op") === "I"))
-      .select("_ibkt").distinct().as[Int].collect().toSet
-    val probePaths = DedupIndex.indexPaths(dir, p.table.appliedCommitIds, touched)
-    assert(probePaths.size > 32, s"probe reads ${probePaths.size} paths")
+    assert(DedupIndex.commitDirCount(dir, p.table.appliedCommitIds) >= 2)
     val m1 = p.table.current.get
     assert(m1.files.size + m1.deltaFiles.size > 32,
       s"table holds ${m1.files.size + m1.deltaFiles.size} files")

@@ -62,18 +62,19 @@ class KnownFilesSpec extends SparkSpec {
     assert(rows(known) == rows(spark.read.schema(schema).parquet(published: _*)))
     assert(rows(known) == Seq("[a,1]", "[b,2]", "[c,3]"))
 
-    // index: partitionBy leaf dirs, read per bucket dir
-    val idx = base.resolve("index").resolve("c-b1.00ff")
-    (1 to 40).map(i => (s"d$i", i.toLong, i % 4)).toDF("doc_id", "lsn", "_ibkt")
-      .write.partitionBy("_ibkt").parquet(idx.toString)
-    val buckets = Fs.listDir(idx).filter(_.getFileName.toString.startsWith("_ibkt="))
-    assert(buckets.size == 4)
-    assert(Fs.listDir(buckets.head).exists(_.getFileName.toString.endsWith(".crc")))
-    val knownIdx = KnownFiles.read(spark, KnownFiles.ofDirs(buckets), schema)
-    val listedIdx = spark.read.schema(schema).parquet(buckets.map(_.toString): _*)
+    // index: flat commit dirs of `_ibkt`-sorted files, read per commit dir
+    val idxSchema = schema.add("_ibkt", IntegerType)
+    val commits = Seq("c-b1.00ff", "c-b2.0a0b").map(base.resolve("index").resolve(_))
+    commits.zipWithIndex.foreach { case (c, k) =>
+      (1 to 40).map(i => (s"d$k-$i", i.toLong, i % 4)).toDF("doc_id", "lsn", "_ibkt")
+        .repartition(2).sortWithinPartitions("_ibkt").write.parquet(c.toString)
+    }
+    assert(Fs.listDir(commits.head).exists(_.getFileName.toString.endsWith(".crc")))
+    val knownIdx = KnownFiles.read(spark, KnownFiles.ofDirs(commits), idxSchema)
+    val listedIdx = spark.read.schema(idxSchema).parquet(commits.map(_.toString): _*)
     assert(knownIdx.schema == listedIdx.schema)
     assert(rows(knownIdx) == rows(listedIdx))
-    assert(knownIdx.count() == 40)
+    assert(knownIdx.count() == 80)
   }
 
   test("a deleted file fails the read instead of returning fewer rows") {
@@ -105,5 +106,14 @@ class KnownFilesSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       CdcPipeline.readSideTable(spark, side.toString, schema))
     assert(e.getMessage.contains("nested"))
+    // a near-dup index dir in the older `_ibkt=<b>/` sub-dir layout: the
+    // probe's read refuses it instead of returning no rows
+    val legacy = base.resolve("neardups").resolve("index").resolve("c-b1.00ff")
+    writeDir(Seq(("a", 1L)).toDF("doc_id", "lsn"), legacy.resolve("_ibkt=3"))
+    val e2 = intercept[IllegalStateException](
+      graft.operators.DedupIndex.probe(spark, base.resolve("neardups").toString, Set("b1"),
+        graft.operators.DedupIndex.bandRows(Seq(("d", 2L, Seq(1, 2, 3, 4)))
+          .toDF("doc_id", "lsn", "tokens"))))
+    assert(e2.getMessage.contains("_ibkt=3"))
   }
 }

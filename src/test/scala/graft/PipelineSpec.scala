@@ -692,6 +692,42 @@ class PipelineSpec extends SparkSpec {
     info(s"conflict-retries observed: ${conflicts.get()}")
   }
 
+  test("a driver-local batch evaluates its rules in tasks: concurrent splits never misroute a row") {
+    // The apply path plans a batch's valid and error sides concurrently
+    // (error staging, the near-dup stage, the merge). Over a driver-local
+    // batch the optimizer would evaluate the rule array on the driver in
+    // each plan, and lambda functions (array_compact's filter, the extra
+    // rule's `exists`) keep their loop variable in the shared expression
+    // instance — so a row could land on the wrong side. The apply path
+    // rebinds such a batch (CdcPipeline.inTasks); four concurrent plans
+    // over each rebound split must route every row to its side.
+    import graft.operators.{Conform, Validate}
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val negativeToken = when(exists(col("tokens"), t => t < 0), lit("negative_token"))
+    val good = (1 to 120).map(i =>
+      (i.toLong, "I", s"d$i", Option((0 until 20).map(j => i * 31 + j)), Option(20L), "s"))
+    val rows = good ++ Seq(
+      (121L, "I", "bad-ntok", Option(Seq(1, 2, 3)), Option(99L), "s"),
+      (122L, "I", "bad-neg", Option(Seq(1, -2, 3)), Option(3L), "s"))
+    val validIds = good.map(_._3).toSet
+    val errorIds = Set("bad-ntok", "bad-neg")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try (1 to 40).foreach { t =>
+      val raw = CdcPipeline.inTasks(
+        rows.toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source"))
+      val split = Validate(Conform(raw), s"b$t", Seq(negativeToken))
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        Future(df.select("doc_id").as[String].collect().toSet)
+      val got = Seq(ids(split.valid), ids(split.errors), ids(split.valid), ids(split.errors))
+        .map(Await.result(_, 2.minutes))
+      assert(got == Seq(validIds, errorIds, validIds, errorIds),
+        s"try $t misrouted: valid-only ${got(0) -- validIds}, errors ${got(1)}")
+    } finally pool.shutdown()
+  }
+
   test("contamination rule composes with the Validate array and routes to errors") {
     import graft.functions.DedupOps
     import graft.operators.Contamination

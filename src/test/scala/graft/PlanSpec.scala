@@ -510,6 +510,56 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*("), "V2 read fell out of codegen")
   }
 
+  test("near-dup index: the append writes with no exchange, its compaction with one range exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL, ShuffleExchangeLike}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import graft.operators.DedupIndex
+    import spark.implicits._
+    object Walk extends AdaptiveSparkPlanHelper
+    val dir = tmpDir("ndplan")
+    val indexDir = java.nio.file.Paths.get(dir, "index").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val s = qe.executedPlan.toString
+        if (s.contains("WriteFiles") && s.contains(indexDir)) plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def captured(n: Int): Seq[SparkPlan] = {
+      import scala.collection.JavaConverters._
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(100)
+      val got = plans.iterator().asScala.toSeq
+      plans.clear()
+      got
+    }
+    def bands(from: Int) = DedupIndex.bandRows((from until from + 50).map(i =>
+      (s"d$i", i.toLong, (0 until 30).map(j => (i * 1000 + j * 7) % 65536)))
+      .toDF("doc_id", "lsn", "tokens"))
+    spark.listenerManager.register(listener)
+    try {
+      DedupIndex.append(bands(0), dir, "pa")
+      DedupIndex.append(bands(50), dir, "pb")
+      val appends = captured(2)
+      assert(appends.size == 2, s"captured ${appends.size} append writes")
+      appends.foreach(w =>
+        assert(Walk.collect(w) { case e: Exchange => e }.isEmpty, s"index append shuffles:\n$w"))
+      assert(DedupIndex.compact(spark, dir, Set("pa", "pb"), "pb") == 2)
+      val compactions = captured(1)
+      assert(compactions.size == 1, s"captured ${compactions.size} compaction writes")
+      val exchanges = Walk.collect(compactions.head) { case e: Exchange => e }
+      assert(exchanges.size == 1, s"index compaction exchanges:\n${compactions.head}")
+      assert(exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning] &&
+        exchanges.head.asInstanceOf[ShuffleExchangeLike].shuffleOrigin == REPARTITION_BY_COL,
+        s"expected the _ibkt range exchange:\n${compactions.head}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("changesSince delta replay is a pure file read: no exchange, no join") {
     import graft.ingest.CdcGenerator
     import graft.operators.MergeOnRead
