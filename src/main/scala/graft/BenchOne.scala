@@ -17,8 +17,6 @@ import graft.streaming.{CdcPipeline, PipelineConfig}
   *    BENCHONE mode=<m> cores=<c> events=<n> sec=<s> eps=<n/s>
   *  - `stage`: only write the change log to changeLogDir.
   *  - `skew`: run [[Bench.skewStudy]] alone.
-  *  - `compactab`: same-JVM interleaved A/B of compact's agg and sort
-  *    folds over a MOR table built from changeLogDir.
   *  - `bootstrap` | `bootmerge`: the initial load through bootstrap's
   *    bucketed write vs through MERGE into the empty table.
   */
@@ -59,54 +57,6 @@ object BenchOne {
     if (mode == "skew") {
       // run ONLY the hot-key skew study (diagnostic for Bench.skewStudy)
       println(s"BENCHONE skew cores=$cores ${Bench.skewStudy(spark)}")
-      spark.stop()
-      return
-    }
-
-    if (mode == "compactab") {
-      // Interleaved same-JVM A/B of compact's two whole-table fold plans
-      // (agg / sort) with a NOOP sink (guide
-      // §1.4): the table is built ONCE (4 MOR batches, no compact), then
-      // each sample computes the fold and discards it — isolating the
-      // fold plan from the (common) write and from this box's 2.5×
-      // cross-run variance by alternating variants inside one session.
-      val log  = args(2)
-      val base = java.nio.file.Files.createTempDirectory("graft-benchone-cab")
-      try {
-        val p = new CdcPipeline(spark, PipelineConfig(
-          tableRoot = s"$base/table", changeLogDir = log,
-          checkpointDir = s"$base/ckpt", errorDir = s"$base/errors",
-          lineageDir = s"$base/lineage", numBuckets = buckets, mode = "mor",
-          compactThreshold = Double.PositiveInfinity))
-        (0 until batches).foreach { b =>
-          p.applyBatch(spark.read.parquet(f"$log/batch-$b%05d"), b.toLong); ()
-        }
-        val m = p.table.current.get
-        def fold(v: String) =
-          if (v == "agg") MergeOnRead.resolveViaAgg(p.table, m)
-          else MergeOnRead.resolve(p.table)
-        val variants = Seq("agg", "sort")
-        variants.foreach { v => // warm codegen per variant
-          fold(v).limit(1).write.format("noop").mode("overwrite").save()
-        }
-        val samples = for (s <- 1 to 3; v <- variants) yield {
-          // release the previous sample's shuffle files (ContextCleaner
-          // runs on GC) so samples don't degrade monotonically under
-          // /tmp writeback pressure
-          System.gc()
-          Thread.sleep(500)
-          val t0 = System.nanoTime()
-          fold(v).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"BENCHONE compactab sample=$s variant=$v sec=$sec%.2f")
-          (v, sec)
-        }
-        variants.foreach { v =>
-          val xs = samples.filter(_._1 == v).map(_._2).sorted
-          println(f"BENCHONE compactab median variant=$v sec=${xs(xs.size / 2)}%.2f " +
-            f"runs=${xs.map(x => f"$x%.1f").mkString("/")}")
-        }
-      } finally graft.table.Fs.deleteRecursively(base)
       spark.stop()
       return
     }

@@ -55,24 +55,6 @@ object PlanDump {
           DedupIndex.probe(spark, s"$base/neardups", p.table.appliedCommitIds, bands)
             .explain("formatted")
         } finally graft.table.Fs.deleteRecursively(base)
-      case "compact_fold" =>
-        // the whole-table compaction fold, one-pass agg (compact's pick
-        // when most buckets are dirty)
-        import graft.streaming.{CdcPipeline, PipelineConfig}
-        val base = java.nio.file.Files.createTempDirectory("graft-plandump-cf")
-        try {
-          val p = new CdcPipeline(spark, PipelineConfig(
-            tableRoot = s"$base/table", changeLogDir = s"$base/unused",
-            checkpointDir = s"$base/ckpt", errorDir = s"$base/errors",
-            lineageDir = s"$base/lineage", numBuckets = 4, mode = "mor",
-            compactThreshold = Double.PositiveInfinity))
-          val ev = graft.ingest.CdcGenerator.events(spark, sfDir)
-          p.applyBatch(ev.filter(col("lsn") < graft.ingest.CdcGenerator.LsnStride), 0L)
-          p.applyBatch(ev.filter(col("lsn") >= graft.ingest.CdcGenerator.LsnStride), 1L)
-          val m = p.table.current.get
-          println("==== compact fold, one-pass agg (resolveViaAgg) ====")
-          graft.operators.MergeOnRead.resolveViaAgg(p.table, m).explain("formatted")
-        } finally graft.table.Fs.deleteRecursively(base)
       case "query" =>
         val name = args(2)
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -133,14 +133,17 @@ object DedupIndex {
   private[graft] def indexPaths(dir: String, applied: Set[String]): Seq[Path] =
     appliedDirs(indexRoot(dir), applied)
 
-  /** Ledger-visible index rows restricted to `touched` buckets. The
-    * driver lists the flat commit dirs itself ([[KnownFiles]]), so the
-    * probe runs no Spark listing job. */
+  /** Ledger-visible index rows restricted to `touched` of the index's
+    * `numBuckets` buckets; a batch touching all of them reads the index
+    * unfiltered (the predicate would prune nothing). [[KnownFiles]]
+    * lists the flat commit dirs, so the probe runs no Spark listing job. */
   private def readIndex(
       spark: SparkSession, dir: String, applied: Set[String],
-      touched: Set[Int]): DataFrame =
-    KnownFiles.read(spark, KnownFiles.ofDirs(indexPaths(dir, applied)), IndexSchema)
-      .filter(col("_ibkt").isin(touched.toSeq.sorted: _*))
+      touched: Set[Int], numBuckets: Int): DataFrame = {
+    val idx = KnownFiles.read(spark, KnownFiles.ofDirs(indexPaths(dir, applied)), IndexSchema)
+    if ((0 until numBuckets).forall(touched.contains)) idx
+    else idx.filter(col("_ibkt").isin(touched.toSeq.sorted: _*))
+  }
 
   /** Lanes of exact agreement between two 16-lane signatures. */
   private def sigAgree(a: Column, b: Column): Column =
@@ -153,11 +156,13 @@ object DedupIndex {
     * (within-batch pairs, earlier (lsn, doc_id) wins). Returns one row
     * per flagged doc: (doc_id, lsn, dup_of, dup_lsn, agree), dup_of =
     * the earliest matching doc (deterministic representative).
-    * @param bands persisted [[bandRows]] of the batch */
+    * @param bands persisted [[bandRows]] of the batch
+    * @param numBuckets the index bucket count `bands` was built with */
   def probe(
       spark: SparkSession, dir: String, applied: Set[String],
       bands: DataFrame, agreeMin: Int = AgreeMin,
-      touchedHint: Option[Set[Int]] = None): DataFrame = {
+      touchedHint: Option[Set[Int]] = None,
+      numBuckets: Int = IndexBuckets): DataFrame = {
     // touched buckets: bounded driver collect (≤ numBuckets ints — the
     // same exact-probe class as the merge's touched-bucket collect);
     // the pipeline passes the set its append observed, so the persisted
@@ -165,7 +170,7 @@ object DedupIndex {
     val touched = touchedHint.getOrElse(
       bands.select(col("_ibkt")).distinct()
         .collect().map(_.getInt(0)).toSet)
-    val idx = readIndex(spark, dir, applied, touched)
+    val idx = readIndex(spark, dir, applied, touched, numBuckets)
       .select(col("doc_id").as("_i_doc"), col("lsn").as("_i_lsn"),
         col("sig").as("_i_sig"), col("band"), col("key"))
     val b = bands.select(

@@ -193,8 +193,9 @@ object MergeOnRead {
   }
 
   /** Resolved (fully merged) view of a snapshot: base ∪ deltas → LWW by
-    * LSN per doc_id. Both sides shuffle on doc_id once; base rows act as
-    * events at their stored `_lsn` (op = D for persisted tombstones).
+    * LSN per doc_id, folded bucket-locally (doc_id is never a shuffle
+    * key); base rows act as events at their stored `_lsn` (op = D for
+    * persisted tombstones).
     * The result RETAINS winning tombstones as `_tombstone = true` rows —
     * readers filter them, [[compact]] persists them (so late lower-LSN
     * events can never resurrect a deleted doc), vacuum/expiry drops them
@@ -391,62 +392,31 @@ object MergeOnRead {
   }
 
   /** Last-writer-wins fold WITHIN each partition (callers guarantee all
-    * rows of a doc_id share a partition — the bucket invariant): external
-    * sort by (doc_id, lsn), then keep the last row of every doc_id run.
-    * Same result as groupBy(doc_id).agg(max_by(…, lsn)) without the hash
-    * aggregate or its exchange; O(1) state per task beyond the sort.
-    * Input layout: payload…, lsn, op, _from_base. */
+    * rows of a doc_id share a partition — the bucket invariant): the
+    * [[graft.plans.LwwFold]] node over `events`, which the session's
+    * planner turns into an in-partition sort by (doc_id, lsn, _from_base)
+    * and an `InternalRow` run-fold keeping each doc_id's last row. Same
+    * result as groupBy(doc_id).agg(max_by(…, (lsn, _from_base))) without
+    * the hash aggregate or its exchange; O(1) state per task beyond the
+    * sort. Input layout: payload…, lsn, op, _from_base. Output: payload…,
+    * `_lsn`, `_tombstone` [, [[ActionCol]]], payload nullability as given.
+    * A session built without [[graft.plans.GraftExtensions]] cannot plan
+    * the node and fails here, typed. */
   private[operators] def localLww(
       events: DataFrame, payloadFields: Seq[StructField],
       classified: Boolean): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
     val outSchema = StructType(payloadFields ++ Seq(
       StructField(LsnCol, LongType, nullable = false),
       StructField(Merge.TombCol, BooleanType, nullable = true)) ++
       (if (classified) Seq(StructField(ActionCol, StringType, nullable = false))
        else Seq.empty))
-    val nPayload = payloadFields.size
-    val docIdIdx = payloadFields.indexWhere(_.name == "doc_id")
-    val lsnIdx   = nPayload
-    val opIdx    = nPayload + 1
-    val fromIdx  = nPayload + 2
-    events
-      // _from_base last in the sort = base wins LSN ties (keep-last fold),
-      // matching the strict `batch.lsn > target._lsn` contract: a replayed
-      // event at its already-applied LSN is a stale no-op, not an update
-      .sortWithinPartitions(col("doc_id"), col("lsn"), col("_from_base"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[Row] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): Row = {
-            var cur       = in.next()
-            var baseLive  = false // run contains a live (non-tombstone) base row
-            var batchSeen = false
-            def note(r: Row): Unit = {
-              if (r.getBoolean(fromIdx)) baseLive = r.getString(opIdx) != "D"
-              else batchSeen = true
-            }
-            note(cur)
-            while (in.hasNext &&
-                java.util.Objects.equals(in.head.get(docIdIdx), cur.get(docIdIdx))) {
-              cur = in.next(); note(cur)
-            }
-            val winnerIsDelete = cur.getString(opIdx) == "D"
-            val vals = new Array[Any](outSchema.size)
-            var i = 0
-            while (i < nPayload) { vals(i) = cur.get(i); i += 1 }
-            vals(lsnIdx) = cur.getLong(lsnIdx)
-            vals(opIdx)  = winnerIsDelete
-            if (classified)
-              vals(fromIdx) =
-                if (cur.getBoolean(fromIdx)) { if (batchSeen) "stale" else "keep" }
-                else if (!winnerIsDelete) { if (baseLive) "update" else "insert" }
-                else { if (baseLive) "delete" else "delete_noop" }
-            Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-          }
-        }
-      }(Encoders.row(outSchema))
+    org.apache.spark.sql.classic.GraftSqlBridge.wrap(events, graft.plans.LwwFoldStrategy,
+      new IllegalStateException("the graft LWW fold is planned by the GraftExtensions " +
+        "planner strategy; " + graft.plans.GraftExtensions.InstallHint)) { child =>
+      graft.plans.LwwFold(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(outSchema),
+        classified, child)
+    }
   }
 
   /** Eagerly fold ALL pending deltas back into base files — the write
@@ -472,19 +442,8 @@ object MergeOnRead {
 
     val touched = cur.deltaFiles.map(_.bucket).toSet
     val touchedBase = cur.files.filter(f => touched.contains(f.bucket))
-    // fold choice mirrors compact()'s measured A/B: below the per-bucket
-    // plan limit the bucket-local fold runs with ZERO exchanges
-    // (plan-gated — the trickle case's precious property); above it the
-    // sort path would pay a bucket-keyed exchange + external sort + row
-    // codec anyway, and the hash-agg fold beats that by ~2× (BASELINE.md
-    // round-4).
-    val useAgg = touched.size > PerBucketPlanLimit
     val folded =
-      if (useAgg) aggLww(
-        eventsFrame(table, cur, touchedBase, cur.deltaFiles),
-        cur.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq,
-        classified = true)
-      else foldDirtyBuckets(table, cur, touchedBase, cur.deltaFiles, classified = true)
+      foldDirtyBuckets(table, cur, touchedBase, cur.deltaFiles, classified = true)
     val obs = Observation(s"fold-$commitId")
     def cnt(a: String) = sum(when(col(ActionCol) === a, 1L).otherwise(0L)).as(a)
     val observed = folded.observe(
@@ -493,7 +452,7 @@ object MergeOnRead {
       .drop(ActionCol)
       .withColumn("_bucket", bucketOf(col("doc_id"), cur.numBuckets))
     val newFiles =
-      table.writeDataFiles(out, commitId, cur.numBuckets, prePartitioned = !useAgg)
+      table.writeDataFiles(out, commitId, cur.numBuckets, prePartitioned = true)
     val m = obs.get
     def g(k: String): Long = m.get(k) match {
       case Some(null)      => 0L
@@ -823,19 +782,8 @@ object MergeOnRead {
 
     val buckets = rebucketTo.getOrElse(cur.numBuckets)
     require(buckets > 0, s"bucket count must be positive, got $buckets")
-    // Fold choice, decided from manifest metadata (free): the measured
-    // round-4 A/B (BASELINE.md, 4M events / 64 buckets) put the hash-agg
-    // full fold at 1.9×/2.4× the sort+run-fold's speed at 2/8 cores with
-    // better 2→8 scaling (0.59 vs 0.46) — external sort of full payload
-    // rows is the bandwidth hog, not the exchange. But agg drags the
-    // WHOLE table through a doc_id exchange, so a mostly-CLEAN table
-    // (scheduled compact after a trickle) keeps the bucket-local fold,
-    // where clean buckets stream by without folding at all.
-    val dirtyFrac =
-      cur.deltaFiles.map(_.bucket).distinct.size.toDouble / cur.numBuckets
-    val base =
-      if (dirtyFrac >= 0.5) resolveViaAgg(table, cur) else resolve(table)
-    val resolved = base
+    // clean buckets stream through; dirty ones fold bucket-locally
+    val resolved = resolve(table)
       .filter(
         !coalesce(col(Merge.TombCol), lit(false)) ||
           col(LsnCol) >= expireTombstonesBelow)
@@ -857,84 +805,6 @@ object MergeOnRead {
     MergeStats(commitId, cur.version + 1, skipped = false, buckets,
       cur.rowCount, newRows, 0, 0, 0, 0, 0, 0, -1, cur.watermarkLsn,
       (System.nanoTime() - t0) / 1000000, Seq.empty)
-  }
-
-  /** The full-table LWW fold as ONE hash aggregation — the A/B
-    * alternative to [[resolve]]'s sort+run-fold for whole-table
-    * compaction: `groupBy(doc_id).agg(max_by(row, (lsn, from_base)))`
-    * pays one doc_id exchange + an (Object)HashAggregate instead of a
-    * bucket-keyed exchange + external sort + row-codec fold. Tie
-    * semantics match [[localLww]] exactly: struct ordering on
-    * (lsn, _from_base) makes the base row beat a same-LSN delta (false <
-    * true). Semantically ≡ resolve() by construction (PipelineSpec gate);
-    * [[compact]] picks it when most buckets are dirty. */
-  private[graft] def resolveViaAgg(table: SnapshotTable, m: Manifest): DataFrame = {
-    val payloadFields =
-      m.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq
-    aggLww(
-      eventsFrame(table, m, m.files, m.deltaFiles), payloadFields,
-      classified = false)
-  }
-
-  /** base ∪ delta rows in [[localLww]]'s input layout
-    * (payload…, lsn, op, _from_base). */
-  private def eventsFrame(
-      table: SnapshotTable, m: Manifest,
-      baseFiles: Seq[graft.table.DataFile],
-      deltaFiles: Seq[graft.table.DataFile]): DataFrame = {
-    val payloadCols =
-      m.schema.fieldNames.filterNot(Merge.InternalCols.contains).toSeq
-    val payloadFields =
-      m.schema.fields.filter(f => payloadCols.contains(f.name)).toSeq
-    val deltaSchema = StructType(
-      payloadFields ++
-        Seq(StructField("lsn", LongType, nullable = false),
-          StructField("op", StringType, nullable = false)))
-    val baseOp = when(coalesce(col(Merge.TombCol), lit(false)), lit("D"))
-      .otherwise(lit("I")).as("op")
-    table.readFiles(baseFiles, m.schema)
-      .select(payloadCols.map(col) :+ col(LsnCol).as("lsn") :+ baseOp :+
-        lit(true).as("_from_base"): _*)
-      .unionByName(table.readFiles(deltaFiles, deltaSchema).select(
-        payloadCols.map(col) :+ col("lsn") :+ col("op") :+
-          lit(false).as("_from_base"): _*))
-  }
-
-  /** The [[localLww]] fold as ONE hash aggregation — same input layout,
-    * same output contract (payload…, _lsn, _tombstone [, _action]), same
-    * tie semantics (struct ordering on (lsn, _from_base): the base row
-    * beats a same-LSN delta). Pays a doc_id exchange instead of the
-    * external sort + row-codec run-fold; the measured winner for folds
-    * covering most of the table (BASELINE.md round-4 A/B). */
-  private def aggLww(
-      events: DataFrame, payloadFields: Seq[StructField],
-      classified: Boolean): DataFrame = {
-    val payloadCols = payloadFields.map(_.name)
-    val rowStruct = struct(
-      payloadCols.filterNot(_ == "doc_id").map(col) ++
-        Seq(col("lsn"), col("op"), col("_from_base")): _*)
-    val agged = events
-      .groupBy(col("doc_id"))
-      .agg(
-        max_by(rowStruct, struct(col("lsn"), col("_from_base"))).as("_w"),
-        // per-doc facts the classification needs: a live base row exists
-        // (base holds ≤1 row per doc), and any batch/delta row was seen
-        max(when(col("_from_base") && col("op") =!= "D", 1).otherwise(0)).as("_bl"),
-        max(when(!col("_from_base"), 1).otherwise(0)).as("_bs"))
-    val baseLive = col("_bl") === 1
-    val action =
-      when(col("_w._from_base"),
-        when(col("_bs") === 1, lit("stale")).otherwise(lit("keep")))
-        .otherwise(when(col("_w.op") =!= "D",
-          when(baseLive, lit("update")).otherwise(lit("insert")))
-          .otherwise(when(baseLive, lit("delete")).otherwise(lit("delete_noop"))))
-    agged.select(
-      payloadFields.toIndexedSeq.map { f =>
-        if (f.name == "doc_id") col("doc_id")
-        else col(s"_w.${f.name}").as(f.name)
-      } ++
-        Seq(col("_w.lsn").as(LsnCol), (col("_w.op") === "D").as(Merge.TombCol)) ++
-        (if (classified) Seq(action.as(ActionCol)) else Seq.empty): _*)
   }
 
   /** The authoritative LOGICAL view of a table (at a version): resolved

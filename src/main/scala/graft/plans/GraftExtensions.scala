@@ -28,6 +28,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // into the snapshot-resolve plan (see graft.sources.GraftDataSource)
     ext.injectResolutionRule(session =>
       graft.sources.GraftRelationResolution(session))
+    // the LWW fold every table read and merge runs (see LwwFold)
+    ext.injectPlannerStrategy(_ => LwwFoldStrategy)
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       info("graft_cosine", "graft_cosine(a, b) - fused cosine similarity of two float arrays"),
@@ -63,6 +65,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** How to install the extensions — the message of every typed failure
+    * a session without them hits. */
+  val InstallHint: String =
+    "install it with spark.sql.extensions=graft.plans.GraftExtensions " +
+      "(or SparkSession.builder().withExtensions(new graft.plans.GraftExtensions))"
+
   /** Validate a config argument as a non-null integer LITERAL before
     * evaluating it — `eval(null)` on a column reference throws an
     * internal unbound-attribute error, and a NULL literal would NPE;

@@ -292,9 +292,8 @@ case class GraftTable(
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     throw new IllegalStateException(
-      "graft tables read through the GraftExtensions analyzer rule; install it with " +
-        "spark.sql.extensions=graft.plans.GraftExtensions " +
-        "(or SparkSession.builder().withExtensions(new graft.plans.GraftExtensions))")
+      "graft tables read through the GraftExtensions analyzer rule; " +
+        graft.plans.GraftExtensions.InstallHint)
 
   /** Write path: the V2→V1 write bridge (`V1_BATCH_WRITE`, the same
     * bridge Delta shipped on) hands the driver-side frame to

@@ -351,7 +351,8 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     // flag rows) — persisting it would only add a cache write; under
     // "quarantine" it feeds the roster append and two joins, so pin it
     val flags0 = DedupIndex.probe(
-      spark, nearDupRoot, applied, bands, cfg.nearDupAgreeMin, Some(touched))
+      spark, nearDupRoot, applied, bands, cfg.nearDupAgreeMin, Some(touched),
+      cfg.nearDupIndexBuckets)
     val flags =
       if (cfg.nearDupPolicy == "flag") flags0
       else flags0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -16,6 +16,19 @@ object GraftSqlBridge {
       plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(session.asInstanceOf[SparkSession], plan)
 
+  /** A frame over `build(df's analyzed plan)` on df's session — how the
+    * engine puts its own logical nodes on top of a frame. Fails with
+    * `unplanned` when the session's planner lacks `strategy`, the one
+    * that plans those nodes. */
+  def wrap(
+      df: org.apache.spark.sql.DataFrame,
+      strategy: org.apache.spark.sql.execution.SparkStrategy, unplanned: => Throwable)(
+      build: LogicalPlan => LogicalPlan): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
+    if (!ds.sparkSession.sessionState.planner.strategies.contains(strategy)) throw unplanned
+    Dataset.ofRows(ds.sparkSession, build(ds.queryExecution.analyzed))
+  }
+
   /** A parquet scan over an explicit file index: the relation
     * `spark.read.schema(dataSchema).parquet(..)` resolves to, with the
     * caller's index in place of the listing `InMemoryFileIndex`. The

@@ -237,10 +237,19 @@ class DedupIndexSpec extends SparkSpec {
     assert(scans.size == 1, s"probe scans: $scans")
     val scanned = scans.head.metrics("numOutputRows").value
     assert(scanned < indexRows, s"probe scanned $scanned of $indexRows index rows")
-    // every bucket "touched" = an unfiltered read: same flags
+    // every bucket touched: the probe reads the index unfiltered — no
+    // `_ibkt` predicate anywhere in its plan — and flags the same docs
     val unfiltered = DedupIndex.probe(spark, dir, applied, bands,
       touchedHint = Some((0 until DedupIndex.IndexBuckets).toSet))
     assert(flags(unfiltered) == got)
+    val uPlan = unfiltered.queryExecution.executedPlan
+    val bucketPreds = Walk.collect(uPlan) {
+      case f: org.apache.spark.sql.execution.FilterExec => f.condition
+      case s: FileSourceScanExec => (s.dataFilters ++ s.partitionFilters)
+        .reduceOption(org.apache.spark.sql.catalyst.expressions.And(_, _))
+        .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal(true))
+    }.filter(_.references.exists(_.name == "_ibkt"))
+    assert(bucketPreds.isEmpty, s"all-bucket probe still filters on _ibkt:\n$uPlan")
     bands.unpersist()
   }
 

@@ -1011,80 +1011,98 @@ class PipelineSpec extends SparkSpec {
     assert(eDup.getMessage.contains("duplicate"), eDup.getMessage)
   }
 
-  test("resolveViaAgg ≡ resolve (the compaction A/B fold), incl. ties and tombstones") {
+  test("MOR fold ≡ oracle on reads and compaction: ties, replays, tombstones") {
     import graft.operators.MergeOnRead
+    import graft.streaming.{CdcPipeline, PipelineConfig}
     import spark.implicits._
-    val base = tmpDir("aggfold")
-    val p    = mkPipeline(base, mode = "mor")
-    def batch(rows: (Long, String, String, Option[Seq[Int]], Option[Long], String)*) =
-      rows.toSeq.toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
-    p.applyBatch(batch(
+    val base = tmpDir("foldoracle")
+    val p = new CdcPipeline(spark, PipelineConfig(
+      tableRoot = s"$base/table", changeLogDir = "-", checkpointDir = "-",
+      errorDir = s"$base/errors", lineageDir = s"$base/lineage",
+      numBuckets = 8, mode = "mor", compactThreshold = Double.PositiveInfinity))
+    def batch(rows: PipelineSpec.Event*) = rows.toSeq.toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
+    val b0 = Seq[PipelineSpec.Event](
       (1L, "I", "f-a", Some(Seq(1)), Some(1L), "s"),
       (2L, "I", "f-b", Some(Seq(2)), Some(1L), "s"),
-      (3L, "I", "f-c", Some(Seq(3)), Some(1L), "s")), 0L)
-    p.applyBatch(batch(
+      (3L, "I", "f-c", Some(Seq(3)), Some(1L), "s"))
+    val b1 = Seq[PipelineSpec.Event](
       (5L, "U", "f-a", Some(Seq(9)), Some(1L), "s"),
-      (6L, "D", "f-b", None, None, "s")), 1L)
-    // the two documented same-LSN cases, which both folds must resolve
-    // identically: an exact replay (same lsn, same payload — collapses),
-    // and a delta tying a BASE row's lsn (base wins: f-c keeps Seq(3))
-    p.applyBatch(batch(
+      (6L, "D", "f-b", None, None, "s"))
+    // the two documented same-LSN cases: an exact replay (same lsn, same
+    // payload — collapses), and a delta tying a BASE row's lsn (base
+    // wins: f-c keeps Seq(3))
+    val b2 = Seq[PipelineSpec.Event](
       (5L, "U", "f-a", Some(Seq(9)), Some(1L), "s"),
-      (1L, "U", "f-c", Some(Seq(4)), Some(1L), "tie")), 2L)
-    val m = p.table.current.get
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-        col(graft.operators.Merge.LsnCol),
-        coalesce(col(graft.operators.Merge.TombCol), lit(false)))
-      .collect().map(_.toSeq).toSet
-    assert(canon(MergeOnRead.resolveViaAgg(p.table, m)) ==
-      canon(MergeOnRead.resolve(p.table)))
+      (3L, "U", "f-c", Some(Seq(4)), Some(1L), "tie"))
+    p.applyBatch(batch(b0: _*), 0L)
+    MergeOnRead.compact(p.table, "fo-c0") // b0 becomes the base
+    p.applyBatch(batch(b1: _*), 1L)
+    p.applyBatch(batch(b2: _*), 2L)
+    assert(p.table.current.get.deltaFiles.nonEmpty, "reads must fold deltas")
+    // OracleFold keeps the LAST of equal-LSN events; fed newest batch
+    // first, that is the first-applied one — the strict `lsn > _lsn` rule
+    val oracle = OracleFold.fold((b2 ++ b1 ++ b0).map { case (l, o, d, t, n, src) =>
+      OracleFold.Ev(l, o, d, t.orNull, n, src) })
+    assert(oracle.keySet == Set("f-a", "f-c") && oracle("f-c").tokens == Seq(3))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      r.getAs[String]("doc_id") -> (OracleFold.Doc(
+        r.getAs[scala.collection.Seq[Int]]("tokens"), r.getAs[Long]("n_tok"),
+        r.getAs[String]("source"), r.getAs[Long](graft.operators.Merge.LsnCol)),
+        Option(r.getAs[Any](graft.operators.Merge.TombCol)).contains(true))
+    }.toMap
+    def check(what: String): Unit = {
+      val got = rows(MergeOnRead.resolve(p.table))
+      assert(got.collect { case (d, (doc, false)) => d -> doc } == oracle, what)
+      // the winning delete persists as a tombstone at its own LSN
+      assert(got.get("f-b").map { case (d, t) => (d.lsn, t) } == Some((6L, true)),
+        s"$what: f-b ${got.get("f-b")}")
+    }
+    check("resolve over base + deltas")
+    MergeOnRead.compact(p.table, "fo-c1")
+    assert(p.table.current.get.deltaFiles.isEmpty)
+    check("after compaction")
   }
 
-  test("foldTouched agg path (>64 dirty buckets) matches the bucket-local fold: state AND stats") {
+  test("foldTouched over >64 dirty buckets matches the oracle: state AND stats") {
     import graft.operators.MergeOnRead
     import graft.streaming.{CdcPipeline, PipelineConfig}
     import spark.implicits._
     def mk(buckets: Int) = new CdcPipeline(spark, PipelineConfig(
-      tableRoot = s"${tmpDir(s"aggft$buckets")}/table",
+      tableRoot = s"${tmpDir(s"ftoracle$buckets")}/table",
       changeLogDir = "-", checkpointDir = "-",
-      errorDir = s"${tmpDir(s"aggft$buckets-e")}", lineageDir = s"${tmpDir(s"aggft$buckets-l")}",
+      errorDir = s"${tmpDir(s"ftoracle$buckets-e")}", lineageDir = s"${tmpDir(s"ftoracle$buckets-l")}",
       numBuckets = buckets, mode = "mor",
       compactThreshold = Double.PositiveInfinity))
-    // 128 buckets → ~100+ dirty buckets → the agg path fires naturally;
-    // 8 buckets → bucket-local fold (zero-exchange, plan-gated elsewhere)
-    val pAgg  = mk(128)
-    val pSort = mk(8)
-    val b0 = (0 until 200)
-      .map(i => (i + 1L, "I", s"ft-$i", Some(Seq(i)), Some(1L), "s"))
-      .toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
+    // 128 buckets → ~100+ dirty buckets → the fold routes the dirty slice
+    // through one bucket-keyed exchange; 8 buckets → bucket-local fold
+    // (zero-exchange, plan-gated elsewhere)
+    val e0: Seq[PipelineSpec.Event] = (0 until 200).map(i => (i + 1L, "I", s"ft-$i", Some(Seq(i)), Some(1L), "s"))
     // batch B covers every action class: update, delete, delete-noop
     // (absent doc), stale (lsn below the doc's base), and fresh insert
-    val b1 = ((0 until 50).map(i => (1000L + i, "U", s"ft-$i", Some(Seq(9, i)), Some(2L), "x")) ++
-      (50 until 70).map(i => (1100L + i, "D", s"ft-$i", None: Option[Seq[Int]], None: Option[Long], "s")) ++
-      Seq((1300L, "D", "ft-absent", None: Option[Seq[Int]], None: Option[Long], "s")) ++
+    val e1: Seq[PipelineSpec.Event] = (0 until 50).map(i => (1000L + i, "U", s"ft-$i", Some(Seq(9, i)), Some(2L), "x")) ++
+      (50 until 70).map(i => (1100L + i, "D", s"ft-$i", None, None, "s")) ++
+      Seq((1300L, "D", "ft-absent", None, None, "s")) ++
       (70 until 80).map(i => (0L - i, "U", s"ft-$i", Some(Seq(1)), Some(1L), "stale")) ++
-      (200 until 230).map(i => (1400L + i, "I", s"ft-$i", Some(Seq(i)), Some(1L), "s")))
-      .toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
-    def run(p: CdcPipeline): (graft.operators.MergeStats, Map[String, Seq[Int]]) = {
-      p.applyBatch(b0, 0L)
+      (200 until 230).map(i => (1400L + i, "I", s"ft-$i", Some(Seq(i)), Some(1L), "s"))
+    def df(es: Seq[PipelineSpec.Event]) = es.toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
+    val oracle = OracleFold.fold((e0 ++ e1).map { case (l, o, d, t, n, src) =>
+      OracleFold.Ev(l, o, d, t.orNull, n, src) })
+    def run(p: CdcPipeline): graft.operators.MergeStats = {
+      p.applyBatch(df(e0), 0L)
       MergeOnRead.foldTouched(p.table, "ft-f0", -10L)
-      p.applyBatch(b1, 1L)
+      p.applyBatch(df(e1), 1L)
       val st = MergeOnRead.foldTouched(p.table, "ft-f1", -11L)
-      (st, p.readTable().collect()
-        .map(r => r.getAs[String]("doc_id") ->
-          r.getAs[scala.collection.Seq[Int]]("tokens").toSeq).toMap)
+      assert(p.table.current.get.deltaFiles.isEmpty)
+      assert(tableState(p) == oracle.map { case (d, doc) => d -> doc.copy(lsn = 0L) },
+        s"${p.table.current.get.numBuckets} buckets: state")
+      st
     }
-    val (sAgg, stateAgg)   = run(pAgg)
-    val (sSort, stateSort) = run(pSort)
-    assert(pAgg.table.current.get.deltaFiles.isEmpty)
-    assert(stateAgg == stateSort, "fold paths must produce identical state")
     def counts(s: graft.operators.MergeStats) =
       (s.inserted, s.updated, s.deleted, s.deleteNoops, s.staleEvents)
-    assert(counts(sAgg) == counts(sSort),
-      s"classified stats must match: agg=${counts(sAgg)} sort=${counts(sSort)}")
-    assert(counts(sAgg) == ((30L, 50L, 20L, 1L, 10L)),
-      s"expected action mix: ${counts(sAgg)}")
+    Seq(128, 8).foreach { b =>
+      val st = run(mk(b))
+      assert(counts(st) == ((30L, 50L, 20L, 1L, 10L)), s"$b buckets: action mix ${counts(st)}")
+    }
   }
 
   test("MERGE INTO expression assignments update assigned columns, keep the rest") {
@@ -2304,4 +2322,9 @@ class PipelineSpec extends SparkSpec {
     assert(p.readResolutions().count() == before)
     assert(p.outstandingErrors().count() == 1) // only the lsn=-1 reject sample
   }
+}
+
+object PipelineSpec {
+  /** (lsn, op, doc_id, tokens, n_tok, source) — one raw change event. */
+  type Event = (Long, String, String, Option[Seq[Int]], Option[Long], String)
 }

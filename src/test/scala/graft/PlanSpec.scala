@@ -339,12 +339,14 @@ class PlanSpec extends SparkSpec {
     // foldTouched (targeted compaction / COW pre-fold): the fold+write
     // job must also run with NO exchange — writeDataFiles' prePartitioned
     // contract — and preserve the resolved state exactly
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val foldPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(
           f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
         val s = qe.executedPlan.toString
-        if (s.contains("MapPartitions") && s.contains("WriteFiles")) { foldPlans.add(s); () }
+        val folds = Walk.collect(qe.executedPlan) { case x: graft.plans.LwwFoldExec => x }
+        if (folds.nonEmpty && s.contains("WriteFiles")) { foldPlans.add(s); () }
       }
       override def onFailure(
           f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
@@ -427,6 +429,108 @@ class PlanSpec extends SparkSpec {
         assert(Walk.collect(w) { case j: BaseJoinExec => j }.isEmpty, s"merge write joins:\n$w")
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the LWW fold is LwwFoldExec in COW merge, MOR resolve, foldTouched, compaction") {
+    // one native fold everywhere: no object (de)serialisation around it,
+    // and each plan keeps its exchange count — COW merge: the bucket
+    // route + the batch dedup's doc_id exchange; MOR resolve and
+    // foldTouched at <= 64 dirty buckets: none; compaction: the write's
+    // bucket route
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, SerializeFromObjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.MergeOnRead
+    import graft.plans.LwwFoldExec
+    import graft.streaming.{CdcPipeline, PipelineConfig}
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    object Walk extends AdaptiveSparkPlanHelper
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        seen.add(qe.executedPlan); ()
+      }
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def foldPlans(body: => Unit): Seq[SparkPlan] = {
+      seen.clear()
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      seen.asScala.toSeq.filter(p => Walk.collect(p) { case x: LwwFoldExec => x }.nonEmpty)
+    }
+    def gate(what: String, exchanges: Int)(body: => Unit): Unit = {
+      val ps = foldPlans(body)
+      assert(ps.nonEmpty, s"$what: no plan ran an LwwFoldExec")
+      ps.foreach { p =>
+        val objs = Walk.collect(p) {
+          case o: DeserializeToObjectExec => o
+          case o: SerializeFromObjectExec => o
+        }
+        assert(objs.isEmpty, s"$what: object codec around the fold:\n$p")
+        assert(Walk.collect(p) { case e: Exchange => e }.size == exchanges,
+          s"$what: expected $exchanges exchanges:\n$p")
+      }
+    }
+    def mk(mode: String) = {
+      val base = tmpDir(s"foldexec-$mode")
+      new CdcPipeline(spark, PipelineConfig(
+        tableRoot = s"$base/table", changeLogDir = "-", checkpointDir = "-",
+        errorDir = s"$base/errors", lineageDir = s"$base/lineage",
+        numBuckets = 8, mode = mode, compactThreshold = Double.PositiveInfinity))
+    }
+    def batch(ids: Seq[Int], lsn0: Long) = ids.map(i =>
+      (lsn0 + i, "I", s"fx-$i", Seq(i), 1L, "s")).toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
+    // the update batch touches 2 of 8 buckets, so compaction folds a
+    // mostly-clean table (dirty buckets fold, clean ones stream through)
+    val all = 0 until 40
+    val few = all.filter(i => MergeOnRead.bucketOfValue(s"fx-$i", 8) < 2)
+    spark.listenerManager.register(listener)
+    try {
+      val cow = mk("cow")
+      cow.applyBatch(batch(all, 0L), 0L)
+      gate("COW merge", exchanges = 2)(cow.applyBatch(batch(few, 1000L), 1L))
+      val mor = mk("mor")
+      mor.applyBatch(batch(all, 0L), 0L)
+      gate("foldTouched", exchanges = 0)(MergeOnRead.foldTouched(mor.table, "fx-f", -1L))
+      mor.applyBatch(batch(few, 1000L), 1L)
+      gate("MOR resolve", exchanges = 0)(MergeOnRead.resolve(mor.table).collect())
+      gate("compaction", exchanges = 1)(MergeOnRead.compact(mor.table, "fx-c"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a session without GraftExtensions fails typed when it plans a fold") {
+    import org.apache.spark.sql.SparkSession
+    import graft.operators.MergeOnRead
+    import graft.streaming.{CdcPipeline, PipelineConfig}
+    import spark.implicits._
+    val base = tmpDir("noext")
+    val p = new CdcPipeline(spark, PipelineConfig(
+      tableRoot = s"$base/table", changeLogDir = "-", checkpointDir = "-",
+      errorDir = s"$base/errors", lineageDir = s"$base/lineage",
+      numBuckets = 4, mode = "mor", compactThreshold = Double.PositiveInfinity))
+    p.applyBatch(Seq((1L, "I", "nx-a", Seq(1), 1L, "s"))
+      .toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source"), 0L)
+    assert(p.table.current.get.deltaFiles.nonEmpty, "the read must fold")
+    // a second session over the shared context, built WITHOUT the
+    // extensions (same session juggling as the extensions test below)
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val bare = SparkSession.builder().master("local[4]").create()
+      assert(bare ne shared)
+      val e = intercept[IllegalStateException] {
+        MergeOnRead.resolve(SnapshotTable.load(bare, p.table.root)).collect()
+      }
+      assert(e.getMessage.contains("spark.sql.extensions=graft.plans.GraftExtensions"),
+        e.getMessage)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 
   test("GraftExtensions injects every codegen function at session build (library entry)") {
