@@ -55,6 +55,54 @@ object PlanDump {
           DedupIndex.probe(spark, s"$base/neardups", p.table.appliedCommitIds, bands)
             .explain("formatted")
         } finally graft.table.Fs.deleteRecursively(base)
+      case "route_writes" =>
+        // final AQE plans of the bucket-routed writes: two MOR delta
+        // writes, then two COW merge writes (16 buckets; the second commit
+        // of each lands on a non-empty table). The route exchange and the
+        // shuffle read above it show how AQE sized the write's tasks.
+        import org.apache.spark.sql.execution.SparkPlan
+        import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+        import graft.streaming.{CdcPipeline, PipelineConfig}
+        object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+        val base = java.nio.file.Files.createTempDirectory("graft-plandump-rw")
+        val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+        val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+          override def onSuccess(
+              f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+            val s = qe.executedPlan.toString
+            if (s.contains(s"$base/") && s.contains("/table/data/c-")) plans.add(qe.executedPlan)
+          }
+          override def onFailure(
+              f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        try {
+          val ev = graft.ingest.CdcGenerator.events(spark, sfDir)
+          for (mode <- Seq("mor", "cow")) {
+            val p = new CdcPipeline(spark, PipelineConfig(
+              tableRoot = s"$base/$mode/table", changeLogDir = s"$base/$mode/unused",
+              checkpointDir = s"$base/$mode/ckpt", errorDir = s"$base/$mode/errors",
+              lineageDir = s"$base/$mode/lineage", numBuckets = 16, mode = mode,
+              compactThreshold = Double.PositiveInfinity))
+            for (b <- 0 to 1) {
+              p.applyBatch(ev.filter(col("lsn") % 2 === b), b.toLong)
+              val plan = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+              println(s"==== $mode commit $b: final plan of the data write ====")
+              println(plan)
+              // each shuffle: its origin, its slots, and the partitions
+              // (= tasks) the final plan reads them as
+              val readAs = Walk.collect(plan) { case r: AQEShuffleReadExec =>
+                r.child -> r.partitionSpecs.size }.toMap
+              Walk.collect(plan) { case q: ShuffleQueryStageExec => q }.foreach { q =>
+                println(s"  shuffle ${q.shuffle.shuffleOrigin}: ${q.shuffle.numPartitions} " +
+                  s"slots, read as ${readAs.getOrElse(q, q.shuffle.numPartitions)} partitions")
+              }
+            }
+          }
+        } finally {
+          spark.listenerManager.unregister(listener)
+          graft.table.Fs.deleteRecursively(base)
+        }
       case "query" =>
         val name = args(2)
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -116,7 +116,7 @@ object Bootstrap {
         lit(false).as(Merge.TombCol),
         MergeOnRead.bucketOf(col("doc_id"), numBuckets).as("_bucket")): _*)
 
-    val newFiles = table.writeDataFiles(rows, commitId, numBuckets)
+    val newFiles = table.writeDataFiles(rows, commitId)
     val n        = newFiles.map(_.rows).sum
     try
       table.commit(Manifest(

@@ -108,7 +108,8 @@ object DedupIndex {
 
   /** Band rows (doc_id, lsn, sig, band, key, _ibkt) for a batch's valid
     * inserts — exactly [[IndexSchema]]. Callers persist — the frame feeds
-    * the append and the probe (twice: self arm + index arm). */
+    * the append and the probe (twice: the broadcast side of its join, and
+    * the within-batch rows on the other side). */
   def bandRows(inserts: DataFrame, numBuckets: Int = IndexBuckets): DataFrame =
     inserts
       .select(col("doc_id"), col("lsn"),
@@ -170,20 +171,20 @@ object DedupIndex {
     val touched = touchedHint.getOrElse(
       bands.select(col("_ibkt")).distinct()
         .collect().map(_.getInt(0)).toSet)
-    val idx = readIndex(spark, dir, applied, touched, numBuckets)
-      .select(col("doc_id").as("_i_doc"), col("lsn").as("_i_lsn"),
-        col("sig").as("_i_sig"), col("band"), col("key"))
+    def asEarlier(df: DataFrame) = df.select(col("doc_id").as("_i_doc"),
+      col("lsn").as("_i_lsn"), col("sig").as("_i_sig"), col("band"), col("key"))
     val b = bands.select(
       col("doc_id"), col("lsn"), col("sig"), col("band"), col("key"))
+    // ONE join: the earlier side is the index (earlier commits) plus the
+    // batch's own band rows (within-batch pairs), so one broadcast of the
+    // batch serves both arms
+    val earlierSide = asEarlier(readIndex(spark, dir, applied, touched, numBuckets))
+      .unionByName(asEarlier(b))
     val earlier = col("_i_lsn") < col("lsn") ||
       (col("_i_lsn") === col("lsn") && col("_i_doc") < col("doc_id"))
-    val crossArm = b.join(idx, Seq("band", "key"))
+    val pairs = b.join(earlierSide, Seq("band", "key"))
       .filter(col("_i_doc") =!= col("doc_id") && earlier)
-    val self = b.select(col("doc_id").as("_i_doc"), col("lsn").as("_i_lsn"),
-      col("sig").as("_i_sig"), col("band"), col("key"))
-    val selfArm = b.join(self, Seq("band", "key"))
-      .filter(col("_i_doc") =!= col("doc_id") && earlier)
-    val cand = crossArm.unionByName(selfArm)
+    val cand = pairs
       .select(col("doc_id"), col("lsn"),
         col("_i_doc").as("dup_of"), col("_i_lsn").as("dup_lsn"),
         sigAgree(col("sig"), col("_i_sig")).as("agree"))

@@ -43,7 +43,10 @@ case class MergeStats(
   *    classifies it (insert / update / delete / delete_noop / stale /
   *    keep). The fold output is already bucket-partitioned, so the write
   *    adds no routing exchange (PlanSpec "COW merge write inside
-  *    foreachBatch" gate).
+  *    foreachBatch" gate). The route's partitions are sized by bytes —
+  *    AQE coalesces its bucket slots, never splitting one — so a small
+  *    batch's touched buckets fold and write in one task and a bulk
+  *    batch spreads over a few, each bucket whole in one of them.
   *  - Base rows sort after batch rows at equal LSN, so the strict
   *    `batch.lsn > target._lsn` contract holds: replayed or out-of-order
   *    events are stale no-ops even if the ledger is bypassed.
@@ -145,8 +148,10 @@ object Merge {
     // column with a map-side partial distinct; the bucket set is the same
     // before and after dedup (bucket is a pure function of doc_id).
     val touched: Set[Int] =
-      dedupedBatch.select(bucketOf(col("doc_id"))).distinct()
-        .collect().map(_.getInt(0)).toSet
+      inPhase(table.spark.sparkContext, commitId, "probe") {
+        dedupedBatch.select(bucketOf(col("doc_id"))).distinct()
+          .collect().map(_.getInt(0)).toSet
+      }
 
     // ---- fold the touched slice of the target with the batch ----
     val targetSlice = SchemaEvolution.align(
@@ -182,7 +187,7 @@ object Merge {
     // irrelevant: the LWW fold sorts.
     val routed = SnapshotTable.routeByBucket(
       batchEvents.unionByName(baseEvents).withColumn("_bucket", bucketOf(col("doc_id"))),
-      col("_bucket"), numBuckets).drop("_bucket")
+      col("_bucket")).drop("_bucket")
     val action = col(MergeOnRead.ActionCol)
     def cnt(k: String, v: String) = sum(when(action === v, 1L).otherwise(0L)).as(k)
     val survivors = MergeOnRead
@@ -201,8 +206,7 @@ object Merge {
       .drop(MergeOnRead.ActionCol)
       .withColumn("_bucket", bucketOf(col("doc_id")))
 
-    val newFiles = table.writeDataFiles(survivors, commitId, numBuckets,
-      prePartitioned = true)
+    val newFiles = table.writeDataFiles(survivors, commitId, prePartitioned = true)
     val m = obs.get ++ obsBatch.get
     def g(k: String): Long = m.get(k) match {
       case Some(v: Number) => v.longValue()
@@ -296,6 +300,19 @@ object Merge {
       }
     }
     stats
+  }
+
+  /** Run `body` with its jobs labelled `cdc <commitId> <phase>` when the
+    * caller labels this commit's jobs that way (the pipeline's per-phase
+    * job labels); any other caller's label is left as it is. */
+  private def inPhase[T](sc: org.apache.spark.SparkContext, commitId: String,
+      phase: String)(body: => T): T = {
+    val label = sc.getLocalProperty("spark.job.description")
+    if (label == null || !label.startsWith(s"cdc $commitId ")) body
+    else {
+      sc.setJobDescription(s"cdc $commitId $phase")
+      try body finally sc.setJobDescription(label)
+    }
   }
 
   /** Touched buckets whose BASE file set changed between the snapshot a

@@ -95,7 +95,7 @@ object MergeOnRead {
     // `.d` marks delta (change-event) files; the writer-unique nonce —
     // twin-process safety — is appended by writeDataFiles itself (dir =
     // c-<id>.d.<nonce>), uniformly for every commit path since round 5.
-    val newDeltas = table.writeDataFiles(observed, s"$commitId.d", numBuckets)
+    val newDeltas = table.writeDataFiles(observed, s"$commitId.d")
     val m         = obs.get
     def g(k: String): Long = m.get(k) match {
       case Some(null)      => -1L
@@ -299,8 +299,9 @@ object MergeOnRead {
     * beyond that, one exchange over the dirty slice keyed on the bucket
     * id via [[graft.table.SnapshotTable.routeByBucket]] — never on
     * doc_id. Either way each bucket's rows land whole in one partition
-    * (singly, or as a capped-width residue class of buckets — both
-    * satisfy writeDataFiles' prePartitioned contract).
+    * (a group of whole buckets, or the route's byte-sized partition of
+    * whole buckets — both satisfy writeDataFiles' prePartitioned
+    * contract).
     * @param classified append [[ActionCol]] for stats observation. */
   private def foldDirtyBuckets(
       table: SnapshotTable,
@@ -375,17 +376,18 @@ object MergeOnRead {
       // many dirty buckets: one exchange over the dirty slice only,
       // keyed on the bucket id through the identity-probe remap (equal
       // bucket → one partition slot; doc_id is never a shuffle key).
-      // Width is capped like the write path: at high bucket counts a
-      // 1:1 bucket→task fold schedules thousands of near-empty tasks;
-      // a residue-class slot still co-locates every row of a doc_id
-      // (bucket → slot is a function of the bucket), which is all the
+      // The route is as wide as the session's shuffle partitions and AQE
+      // coalesces its slots by bytes, so thousands of dirty buckets
+      // never schedule thousands of near-empty fold tasks; a partition
+      // of whole buckets still co-locates every row of a doc_id (bucket
+      // → slot is a function of the bucket), which is all the
       // partition-local LWW needs.
       val withB = eventsOf(
         table.readFiles(baseFiles, m.schema),
         table.readFiles(deltaFiles, deltaSchema))
         .withColumn("_b", bucketOf(col("doc_id"), m.numBuckets))
       localLww(
-        graft.table.SnapshotTable.routeByBucket(withB, col("_b"), m.numBuckets)
+        graft.table.SnapshotTable.routeByBucket(withB, col("_b"))
           .drop("_b"),
         payloadFields, classified)
     }
@@ -452,7 +454,7 @@ object MergeOnRead {
       .drop(ActionCol)
       .withColumn("_bucket", bucketOf(col("doc_id"), cur.numBuckets))
     val newFiles =
-      table.writeDataFiles(out, commitId, cur.numBuckets, prePartitioned = true)
+      table.writeDataFiles(out, commitId, prePartitioned = true)
     val m = obs.get
     def g(k: String): Long = m.get(k) match {
       case Some(null)      => 0L
@@ -789,7 +791,7 @@ object MergeOnRead {
           col(LsnCol) >= expireTombstonesBelow)
       .withColumn("_bucket",
         pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
-    val newFiles = table.writeDataFiles(resolved, commitId, buckets)
+    val newFiles = table.writeDataFiles(resolved, commitId)
     val newRows  = newFiles.map(_.rows).sum
     table.commit(cur.copy(
       version = cur.version + 1,

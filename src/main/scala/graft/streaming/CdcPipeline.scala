@@ -216,6 +216,9 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
         val deduped =
           if (cfg.salt > 1 && shouldSalt(raw)) Dedup.lwwSalted(events, cfg.salt)
           else Dedup.lww(events)
+        // probe jobs: mode=auto's bulk/trickle probe here; a COW merge
+        // runs its touched-bucket probe under this label too (Merge.apply
+        // relabels that one job inside the merge phase)
         sc.setJobDescription(s"cdc $commitId probe")
         val useMor = cfg.mode match {
           case "mor"  => true

@@ -267,15 +267,15 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
     * `df` must carry an int `_bucket` column; it is dropped from the data.
     * Returns the DataFile list. */
   /** @param prePartitioned the caller already routed `df` so that each
-    *   bucket's rows sit in ONE partition (one bucket per partition, or a
-    *   residue class of buckets — [[SnapshotTable.routeByBucket]]'s
-    *   contract either way) — skip the exchange here. This is an
-    *   EFFICIENCY contract, not a correctness one: partitionBy always
+    *   bucket's rows sit in ONE partition (a partition may hold many
+    *   buckets — [[SnapshotTable.routeByBucket]]'s contract) — skip the
+    *   exchange here. This is an EFFICIENCY contract, not a
+    *   correctness one: partitionBy always
     *   splits each task's output per bucket, so a violation costs extra
     *   files per bucket (task × bucket), never misattributed rows — and
     *   nothing below may assume a partition holds a single bucket. */
   def writeDataFiles(
-      df: DataFrame, commitId: String, numBuckets: Int,
+      df: DataFrame, commitId: String,
       prePartitioned: Boolean = false): Seq[DataFile] = {
     import org.apache.spark.sql.functions.col
     // WRITER-UNIQUE data dir (c-<id>.<nonce>): two processes replaying
@@ -287,13 +287,14 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
     // loser's files are true orphans ([[vacuum]] sweeps them after the
     // grace window); the winner's manifest only ever references its own.
     val dir = Paths.get(root, "data", s"c-$commitId.${Fs.nonce}")
-    // routeByBucket: collision-free bucket→task slots, width capped at
-    // 4·parallelism; partitionBy below still splits each task's output
-    // into one file per bucket, so the file/bucket layout — and every
-    // pruning path built on it — is independent of the task width.
+    // routeByBucket: every bucket's rows in one partition, partitions
+    // sized by bytes (a trickle commit's buckets share one task);
+    // partitionBy below splits each task's output into one file per
+    // bucket, so the file/bucket layout — and every pruning path built
+    // on it — is independent of the task count.
     val routed =
       if (prePartitioned) df
-      else SnapshotTable.routeByBucket(df, col("_bucket"), numBuckets)
+      else SnapshotTable.routeByBucket(df, col("_bucket"))
     routed
       .write.mode("overwrite")
       .partitionBy("_bucket")
@@ -568,25 +569,28 @@ object SnapshotTable {
       probes
     })
 
-  /** One exchange that co-locates every row of a bucket into one task
-    * slot, collision-free, with task width CAPPED at 4·parallelism (at
-    * high bucket counts 1:1 bucket→task degenerates into thousands of
-    * near-empty tasks — measured 4.6× throughput collapse at 1024
-    * buckets / 32 cores). Above the cap each slot carries the bucket
-    * residue class {g, g+W, …}; bucket → slot stays a pure function of
-    * the bucket id, which is all any bucket-local consumer (the LWW
-    * fold, partitionBy's per-bucket file split) needs. THE single
-    * routing idiom — writeDataFiles, the MOR dirty-bucket fold, and the
-    * COW merge all route through here so the width formula can
-    * never drift between the producer and `prePartitioned` consumers.
-    * `bucketCol` must be an int column holding values in
-    * [0, numBuckets). */
-  def routeByBucket(df: DataFrame, bucketCol: Column, numBuckets: Int): DataFrame = {
+  /** One exchange that co-locates every row of a bucket into one
+    * partition: a `repartition(slot(bucket))` clustering
+    * (`REPARTITION_BY_COL`) whose width is the session's shuffle
+    * partition count W. slot(b) is the identity probe that murmur3-hashes
+    * into partition b mod W, so below W buckets each bucket owns its own
+    * slot and above W each slot carries the bucket residue class
+    * {g, g+W, …}; bucket → partition stays a pure function of the bucket
+    * id, which is all any bucket-local consumer (the LWW fold,
+    * partitionBy's per-bucket file split) needs. AQE sizes the route by
+    * bytes: it coalesces contiguous slots of such a shuffle into fewer
+    * partitions, but never splits one and never reads it locally, so a
+    * bucket never spans two partitions (a 1k-row trickle commit writes
+    * its 16 bucket files from one task, a bulk merge lands in a few
+    * partitions). No `REBALANCE` and no `ENSURE_REQUIREMENTS` exchange
+    * here: AQE may split the first and read the second locally. THE
+    * single routing idiom — writeDataFiles, the MOR dirty-bucket fold,
+    * and the COW merge all route through here. `bucketCol` must be a
+    * non-negative int column. */
+  def routeByBucket(df: DataFrame, bucketCol: Column): DataFrame = {
     import org.apache.spark.sql.functions.{element_at, lit, pmod}
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    val w    = math.min(numBuckets, math.max(1, para * 4))
-    df.repartition(w,
-      element_at(lit(identityProbes(w)), pmod(bucketCol, lit(w)) + 1))
+    val w = org.apache.spark.sql.classic.GraftSqlBridge.shufflePartitions(df)
+    df.repartition(element_at(lit(identityProbes(w)), pmod(bucketCol, lit(w)) + 1))
   }
 
   /** Create an empty table (version 0, no files). */

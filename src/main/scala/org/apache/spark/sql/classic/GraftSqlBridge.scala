@@ -29,6 +29,13 @@ object GraftSqlBridge {
     Dataset.ofRows(ds.sparkSession, build(ds.queryExecution.analyzed))
   }
 
+  /** The partition count a `repartition(cols)` over `df` plans on its
+    * session (`SQLConf.numShufflePartitions`: AQE's initial partition
+    * number when coalescing is on, else `spark.sql.shuffle.partitions`). */
+  def shufflePartitions(df: org.apache.spark.sql.DataFrame): Int =
+    df.asInstanceOf[Dataset[org.apache.spark.sql.Row]].sparkSession
+      .sessionState.conf.numShufflePartitions
+
   /** A parquet scan over an explicit file index: the relation
     * `spark.read.schema(dataSchema).parquet(..)` resolves to, with the
     * caller's index in place of the listing `InMemoryFileIndex`. The

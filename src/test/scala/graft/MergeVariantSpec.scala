@@ -81,6 +81,10 @@ class MergeVariantSpec extends SparkSpec {
   private def tableLive(p: CdcPipeline): Map[String, OracleFold.Doc] =
     liveState(p.table.read(None, None).filter(!coalesce(col(Merge.TombCol), lit(false))))
 
+  /** Live rows of a MOR table: base and deltas folded at read time. */
+  private def morLive(p: CdcPipeline): Map[String, OracleFold.Doc] =
+    liveState(MergeOnRead.resolve(p.table).filter(!coalesce(col(Merge.TombCol), lit(false))))
+
   /** Every persisted row's (lsn, live), tombstones included. */
   private def tableStored(p: CdcPipeline): Map[String, (Long, Boolean)] =
     p.table.read(None, None).collect().map { r =>
@@ -178,11 +182,13 @@ class MergeVariantSpec extends SparkSpec {
   }
 
   test("capped-width regime (numBuckets > 4x parallelism): matches the oracle") {
-    // Above 4·parallelism buckets routeByBucket caps its width below
-    // numBuckets, so every fold/write task carries a residue CLASS of
-    // buckets — a shape the 8-bucket tests never reach.
+    // routeByBucket is as wide as the session's shuffle partitions, and
+    // AQE coalesces its slots by bytes: well above that width every
+    // fold/write task carries residue CLASSES of buckets — a shape the
+    // 8-bucket tests never reach.
     val para    = spark.sparkContext.defaultParallelism
     val buckets = 4 * para + 17
+    assert(buckets > spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val raw = CdcGenerator.events(spark, sf0001)
     def part(b: Int): DataFrame = raw.filter(pmod(col("lsn"), lit(2)) === b)
 
@@ -192,7 +198,7 @@ class MergeVariantSpec extends SparkSpec {
     expectStats(stored, evs(part(0)))
     val s = Merge(p.table, Dedup.lww(Validate(Conform(part(1)), "c1").valid), "mvw-1", 1L)
     val want = expectStats(stored, evs(part(1)))
-    // the capped write must still produce at most one file per bucket
+    // the residue-class write must still produce one file per bucket
     val m = p.table.current.get
     assert(m.files.groupBy(f => (f.bucket, f.path.contains("c-mvw-1"))).forall(_._2.size == 1),
       "multiple files for one bucket in one commit")
@@ -200,6 +206,54 @@ class MergeVariantSpec extends SparkSpec {
     assert(statsOf(s) == want)
     assert(tableLive(p) == OracleFold.fold(evs(raw)))
     assert(tableStored(p) == stored.toMap)
+  }
+
+  test("bucket route keeps every bucket whole: B below and above the shuffle width, AQE on and off") {
+    // routeByBucket's contract — every row of a bucket in one partition —
+    // is what the partition-local LWW fold and the one-file-per-bucket
+    // layout stand on. Drive every route user (COW merge, MOR delta
+    // write, the >64-dirty-bucket routed fold, compaction) at a bucket
+    // count below the 4 shuffle partitions and one above the per-bucket
+    // fold limit, with AQE coalescing the route and with AQE off.
+    val raw = CdcGenerator.events(spark, sf0001)
+    def part(b: Int): DataFrame = raw.filter(pmod(col("lsn"), lit(2)) === b)
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    def onePerBucket(files: Seq[graft.table.DataFile], what: String): Unit =
+      files.groupBy(f => (f.bucket, java.nio.file.Paths.get(f.path).getParent.toString))
+        .foreach { case (k, fs) => assert(fs.size == 1, s"$what: ${fs.size} files for $k") }
+    try {
+      for (aqe <- Seq(true, false); buckets <- Seq(3, 130)) {
+        spark.conf.set(key, aqe.toString)
+        val tag = s"aqe=$aqe B=$buckets"
+        val cow = mkPipeline(tmpDir("mvr"), buckets)
+        cow.applyBatch(part(0), 0L)
+        cow.applyBatch(part(1), 1L)
+        onePerBucket(cow.table.current.get.files, s"$tag COW")
+        assert(tableLive(cow) == OracleFold.fold(evs(raw)), s"$tag COW state")
+
+        val morBase = tmpDir("mvr-mor")
+        val mor = new CdcPipeline(spark, PipelineConfig(
+          tableRoot = s"$morBase/table", changeLogDir = s"$morBase/changelog",
+          checkpointDir = s"$morBase/checkpoint", errorDir = s"$morBase/errors",
+          lineageDir = s"$morBase/lineage", numBuckets = buckets, mode = "mor",
+          compactThreshold = Double.PositiveInfinity))
+        mor.applyBatch(part(0), 0L)
+        mor.applyBatch(part(1), 1L)
+        val m = mor.table.current.get
+        onePerBucket(m.deltaFiles, s"$tag MOR deltas")
+        if (buckets > 64)
+          assert(m.deltaFiles.map(_.bucket).distinct.size > 64, s"$tag: routed fold not reached")
+        assert(morLive(mor) == OracleFold.fold(evs(raw)), s"$tag MOR read")
+        MergeOnRead.compact(mor.table, "mvr-compact")
+        onePerBucket(mor.table.current.get.files, s"$tag compaction")
+        assert(mor.table.current.get.deltaFiles.isEmpty, s"$tag: compaction left deltas")
+        assert(tableLive(mor) == OracleFold.fold(evs(raw)), s"$tag compacted state")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("merge variants: schema evolution through the fold path") {

@@ -1668,10 +1668,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("capped write tasks preserve the one-file-per-bucket layout (W < numBuckets)") {
-    // test session is local[4] → write-task cap W = 16, so a 64-bucket
-    // table routes four bucket residue classes through each task —
-    // the layout contract (one file per non-empty bucket, correct
-    // bucket ids, pruned lookups) must be indistinguishable from the
+    // the test session has 4 shuffle partitions → route width W = 4,
+    // so a 64-bucket table routes sixteen-bucket residue classes
+    // through each slot (and AQE may coalesce slots further) — the
+    // layout contract (one file per non-empty bucket, correct bucket
+    // ids, pruned lookups) must be indistinguishable from the
     // one-task-per-bucket regime
     import graft.operators.MergeOnRead
     val base = tmpDir("cap")
@@ -1994,7 +1995,7 @@ class PipelineSpec extends SparkSpec {
       Seq(("vr-b", Seq(2), 1L, "s", 2L))
         .toDF("doc_id", "tokens", "n_tok", "source", "_lsn")
         .withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(8)).cast("int")),
-      commitId = "vacrace-inflight", numBuckets = 8)
+      commitId = "vacrace-inflight")
     assert(staged.nonEmpty)
     p.table.vacuum(retainVersions = 1)
     staged.foreach(f => assert(

@@ -382,7 +382,7 @@ class PlanSpec extends SparkSpec {
     // only other exchange (the replaced join plan had three).
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
-    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL, ShuffleExchangeLike}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.ingest.CdcGenerator
     import graft.streaming.{CdcPipeline, PipelineConfig}
@@ -418,9 +418,14 @@ class PlanSpec extends SparkSpec {
         assert(w.isInstanceOf[AdaptiveSparkPlanExec], s"merge write ran outside AQE:\n$w")
         assert(w.toString.contains("isFinalPlan=true"), s"AQE plan not final:\n$w")
         val exchanges = Walk.collect(w) { case e: Exchange => e }
+        // the route is a clustering on the bucket's identity-probe slot
+        // (REPARTITION_BY_COL: AQE may coalesce it, never split it)
         val (route, dedup) = exchanges.partition {
-          case s: ShuffleExchangeLike => s.shuffleOrigin == REPARTITION_BY_NUM
-          case _                      => false
+          case s: ShuffleExchangeLike =>
+            val key = s.outputPartitioning.toString
+            s.shuffleOrigin == REPARTITION_BY_COL &&
+              key.contains("element_at(") && key.contains("pmod(_bucket")
+          case _ => false
         }
         assert(route.size == 1, s"expected one bucket-route exchange:\n$w")
         assert(dedup.size == 1 &&
@@ -429,6 +434,63 @@ class PlanSpec extends SparkSpec {
         assert(Walk.collect(w) { case j: BaseJoinExec => j }.isEmpty, s"merge write joins:\n$w")
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a 1k-row MOR commit writes its deltas in one task, one file per touched bucket") {
+    // the bucket route is sized by bytes: AQE coalesces a trickle
+    // commit's bucket slots into one partition, so one task writes every
+    // touched bucket's file (a fixed-width route ran one task per slot)
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeLike}
+    import graft.streaming.{CdcPipeline, PipelineConfig}
+    object Walk extends AdaptiveSparkPlanHelper
+    val base = tmpDir("morwrite")
+    val dataDir = s"$base/table/data/c-"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        if (qe.executedPlan.toString.contains(dataDir)) plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val p = new CdcPipeline(spark, PipelineConfig(
+      tableRoot = s"$base/table", changeLogDir = s"$base/changelog",
+      checkpointDir = s"$base/checkpoint", errorDir = s"$base/errors",
+      lineageDir = s"$base/lineage", numBuckets = 16, mode = "mor",
+      compactThreshold = Double.PositiveInfinity))
+    val batch = spark.range(1000).select(
+      (col("id") + 1).as("lsn"), lit("I").as("op"),
+      concat(lit("doc-"), col("id").cast("string")).as("doc_id"),
+      array(col("id").cast("int")).as("tokens"), lit(1L).as("n_tok"), lit("s").as("source"))
+    spark.listenerManager.register(listener)
+    try {
+      val s = p.applyBatch(batch, 0L)
+      assert(!s.skipped && s.batchEvents == 1000L)
+      import scala.collection.JavaConverters._
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      val writes = plans.iterator().asScala.toSeq
+      assert(writes.size == 1, s"expected one delta write, captured ${writes.size}")
+      val w = writes.head
+      val route = Walk.collect(w) {
+        case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_COL => e
+      }
+      assert(route.size == 1, s"expected one bucket-route exchange:\n$w")
+      val reads = Walk.collect(w) { case r: AQEShuffleReadExec => r }
+      assert(reads.nonEmpty && reads.forall(_.partitionSpecs.size == 1),
+        s"the route was not coalesced into one partition:\n$w")
+    } finally spark.listenerManager.unregister(listener)
+    val deltas = p.table.current.get.deltaFiles
+    assert(deltas.map(_.bucket).toSet == (0 until 16).toSet, "fixture must touch every bucket")
+    assert(deltas.groupBy(_.bucket).forall(_._2.size == 1),
+      s"more than one file for a bucket: ${deltas.map(_.path)}")
+    // a file's `part-<n>` prefix is the partition its task wrote
+    val tasks = deltas.map(f => java.nio.file.Paths.get(f.path).getFileName.toString.take(10)).toSet
+    assert(tasks == Set("part-00000"), s"delta files came from several tasks: $tasks")
+    assert(deltas.map(_.rows).sum == 1000L)
   }
 
   test("the LWW fold is LwwFoldExec in COW merge, MOR resolve, foldTouched, compaction") {
@@ -570,8 +632,9 @@ class PlanSpec extends SparkSpec {
 
   test("identity probes invert murmur3 exactly (one reduce slot per residue class)") {
     // the exchange-free write/fold paths rely on probe(s) landing in
-    // partition s of a W-way HashPartitioning (W = capped write-task
-    // count; each slot owns the bucket residue class {s, s+W, ...}) —
+    // partition s of a W-way HashPartitioning (W = the bucket route's
+    // width, the session's shuffle partitions; each slot owns the bucket
+    // residue class {s, s+W, ...}) —
     // verify the inversion for several widths including 10k
     import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
     import org.apache.spark.sql.types.IntegerType
