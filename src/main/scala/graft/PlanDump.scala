@@ -13,7 +13,8 @@ object PlanDump {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[1]")
+      // the job-timeline case needs the cores its concurrent jobs share
+      .master(if (what == "neardup_jobs") "local[4]" else "local[1]")
       .appName("graft-plandump")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
@@ -55,6 +56,65 @@ object PlanDump {
           DedupIndex.probe(spark, s"$base/neardups", p.table.appliedCommitIds, bands)
             .explain("formatted")
         } finally graft.table.Fs.deleteRecursively(base)
+      case "band_rows" =>
+        // the near-dup index's band rows of a batch of inserts read from
+        // parquet, as the pipeline reads a changelog batch
+        val base = java.nio.file.Files.createTempDirectory("graft-plandump-br")
+        try {
+          graft.ingest.CdcGenerator.events(spark, sfDir)
+            .filter(col("op") === "I" && col("doc_id").isNotNull)
+            .write.parquet(s"$base/inserts")
+          println("==== DedupIndex.bandRows ====")
+          graft.operators.DedupIndex.bandRows(spark.read.parquet(s"$base/inserts"))
+            .explain("formatted")
+        } finally graft.table.Fs.deleteRecursively(base)
+      case "neardup_jobs" =>
+        // the Spark jobs of one flag-policy MOR batch after a first,
+        // applied one, in start order: label, start/end (ms from the
+        // batch's start), tasks, and the call site that launched them
+        import graft.streaming.{CdcPipeline, PipelineConfig}
+        import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+        case class Job(label: String, start: Long, tasks: Int, site: String)
+        val started = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+        val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+        val listener = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit = {
+            val label = Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+            started.put(e.jobId, Job(label, e.time, e.stageInfos.map(_.numTasks).sum,
+              e.stageInfos.map(_.name).lastOption.getOrElse("")))
+            ()
+          }
+          override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.put(e.jobId, e.time); () }
+        }
+        val base = java.nio.file.Files.createTempDirectory("graft-plandump-nj")
+        try {
+          val p = new CdcPipeline(spark, PipelineConfig(
+            tableRoot = s"$base/table", changeLogDir = s"$base/unused",
+            checkpointDir = s"$base/ckpt", errorDir = s"$base/errors",
+            lineageDir = s"$base/lineage", numBuckets = 16, mode = "mor",
+            nearDupPolicy = "flag"))
+          val ev = graft.ingest.CdcGenerator.events(spark, sfDir)
+          p.applyBatch(ev.filter(col("lsn") % 8 =!= 0), 0L)
+          spark.sparkContext.addSparkListener(listener)
+          val t0 = System.currentTimeMillis()
+          p.applyBatch(ev.filter(col("lsn") % 8 === 0), 1L)
+          val deadline = System.currentTimeMillis() + 10000L
+          while (ended.size < started.size && System.currentTimeMillis() < deadline)
+            Thread.sleep(50)
+          import scala.collection.JavaConverters._
+          println("==== jobs of one trickle batch (flag policy, MOR, 16 buckets) ====")
+          println(f"${"job"}%4s  ${"label"}%-22s ${"start"}%6s ${"end"}%6s ${"tasks"}%5s  call site")
+          started.asScala.toSeq.sortBy { case (id, j) => (j.start, id) }.foreach { case (id, j) =>
+            val end = Option(ended.get(id)).map(e => (e - t0).toString).getOrElse("?")
+            println(f"$id%4d  ${j.label}%-22s ${j.start - t0}%6d $end%6s ${j.tasks}%5d  ${j.site}")
+          }
+          val nd = started.asScala.values.count(_.label.endsWith(" neardup"))
+          println(s"near-dup jobs: $nd")
+        } finally {
+          spark.sparkContext.removeSparkListener(listener)
+          graft.table.Fs.deleteRecursively(base)
+        }
       case "route_writes" =>
         // final AQE plans of the bucket-routed writes: two MOR delta
         // writes, then two COW merge writes (16 buckets; the second commit

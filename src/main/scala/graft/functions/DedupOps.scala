@@ -39,10 +39,15 @@ object DedupOps {
   def shingles(text: Column): Column =
     shinglesOfTokens(Tokenize.tokens(text))
 
-  /** [[shingles]] over an ALREADY-TOKENIZED array<int> column — the CDC
-    * path's spelling (change events carry token arrays, not text; an
-    * insert's tokens ARE the doc text's tokens, so signatures agree with
-    * the text-side dedup family). */
+  /** [[shingles]] over an ALREADY-TOKENIZED array<int> column (change
+    * events carry token arrays, not text; an insert's tokens ARE the doc
+    * text's tokens, so signatures agree with the text-side dedup family).
+    * With [[minhash]] and [[bandKeys]] this is the REFERENCE spelling of
+    * the near-dup index's band rows, twinned by [[shinglesOfTokensSql]]
+    * for the DuckDB oracle; the pipeline runs the compiled
+    * [[graft.plans.TokenMinHash]] kernel (a null token drops the three
+    * shingles that touch it, exactly as here), gated bit-equal in
+    * PlanSpec. */
   def shinglesOfTokens(toks: Column): Column =
     when(size(toks) < 3, array().cast("array<bigint>"))
       .otherwise(transform(
@@ -93,7 +98,11 @@ object DedupOps {
 
   /** MinHash signature: array of `numHashes` mins of
     * h_i(s) = (s·A_i + i²+7) mod P with A_i = ((2i+1)·[[M]]) mod P.
-    * Null-safe: empty shingle set → signature of P (sentinel max). */
+    * Null-safe: empty shingle set → signature of P (sentinel max).
+    * The REFERENCE spelling (twin: [[minhashSql]]): it runs interpreted
+    * and re-evaluates its input once per lane. The pipeline's band rows
+    * run [[graft.plans.TokenMinHash]], the offline queries
+    * [[graft.plans.MinHashSig]]. */
   def minhash(sh: Column, numHashes: Int = NumHashes): Column =
     transform(
       sequence(lit(0), lit(numHashes - 1)),
@@ -110,7 +119,8 @@ object DedupOps {
 
   /** LSH band keys: one row key per band, combining the band's signature
     * slice into a single long. Join docs on (band_idx, band_key) to get
-    * candidate pairs — the scale path: no all-pairs comparison. */
+    * candidate pairs — the scale path: no all-pairs comparison. The
+    * near-dup pipeline runs the compiled [[graft.plans.BandKeys]] twin. */
   def bandKeys(
       sig: Column, numHashes: Int = NumHashes, bandSize: Int = BandSize): Column =
     transform(

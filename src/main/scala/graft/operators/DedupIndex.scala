@@ -6,7 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.sql.classic.GraftSqlBridge
+
 import graft.functions.DedupOps
+import graft.plans.{BandKeys, LaneAgree, TokenMinHash}
 import graft.table.{Fs, KnownFiles}
 
 /** Incremental (cross-batch) near-duplicate detection INSIDE the CDC
@@ -24,10 +27,13 @@ import graft.table.{Fs, KnownFiles}
   * commit, probed by each arriving batch.
   *
   *  - Index rows: one per (band, key) of each valid INSERT's MinHash
-  *    signature over its token-trigram shingles
-  *    ([[DedupOps.shinglesOfTokens]] → [[DedupOps.minhash]] →
-  *    [[DedupOps.bandKeys]] — the exact hashes the offline dedup family
-  *    uses, so the DuckDB oracle regenerates them from the event log).
+  *    signature over its token-trigram shingles. The values are those of
+  *    the composed reference chain [[DedupOps.shinglesOfTokens]] →
+  *    [[DedupOps.minhash]] → [[DedupOps.bandKeys]] — the exact hashes
+  *    the offline dedup family uses, so the DuckDB oracle regenerates
+  *    them from the event log — but computed by the compiled kernels
+  *    [[graft.plans.TokenMinHash]] and [[graft.plans.BandKeys]] (the
+  *    composed chain runs interpreted; PlanSpec gates the equivalence).
   *    The full signature rides along (16 longs ×4 band rows — bounded
   *    duplication that saves the probe a signature-lookup join).
   *  - Physical layout: `<indexDir>/c-<commitId>.<nonce>/part-*.parquet`,
@@ -107,20 +113,26 @@ object DedupIndex {
   }
 
   /** Band rows (doc_id, lsn, sig, band, key, _ibkt) for a batch's valid
-    * inserts — exactly [[IndexSchema]]. Callers persist — the frame feeds
-    * the append and the probe (twice: the broadcast side of its join, and
-    * the within-batch rows on the other side). */
+    * inserts — exactly [[IndexSchema]]. One compiled pass per insert:
+    * [[graft.plans.TokenMinHash]] signs the tokens, [[graft.plans.BandKeys]]
+    * keys the bands and `posexplode` numbers them, bit-equal to the
+    * composed reference chain (see the scaladoc above). Callers persist —
+    * the frame feeds the touched-bucket pass, the append and the probe. */
   def bandRows(inserts: DataFrame, numBuckets: Int = IndexBuckets): DataFrame =
     inserts
-      .select(col("doc_id"), col("lsn"),
-        DedupOps.minhash(
-          DedupOps.shinglesOfTokens(col("tokens").cast("array<int>"))).as("sig"))
-      .select(col("doc_id"), col("lsn"), col("sig"),
-        explode(DedupOps.bandKeys(col("sig"))).as("bk"))
-      .select(col("doc_id"), col("lsn"), col("sig"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+      .select(col("doc_id"), col("lsn"), signature(col("tokens").cast("array<int>")).as("sig"))
+      .select(col("doc_id"), col("lsn"), col("sig"), posexplode(bandKeyArray(col("sig"))))
+      .select(col("doc_id"), col("lsn"), col("sig"), col("pos").as("band"), col("col").as("key"))
       .withColumn("_ibkt",
         pmod(xxhash64(col("band"), col("key")), lit(numBuckets.toLong)).cast("int"))
+
+  /** [[graft.plans.TokenMinHash]] over an `array<int>` token column. */
+  private def signature(tokens: Column): Column =
+    GraftSqlBridge.column(TokenMinHash(GraftSqlBridge.expression(tokens)))
+
+  /** [[graft.plans.BandKeys]]: band b's key at position b. */
+  private def bandKeyArray(sig: Column): Column =
+    GraftSqlBridge.column(BandKeys(GraftSqlBridge.expression(sig)))
 
   /** `c-<id>.<nonce>` dirs under `root` whose commit is applied. */
   private def appliedDirs(root: Path, applied: Set[String]): Seq[Path] =
@@ -146,11 +158,10 @@ object DedupIndex {
     else idx.filter(col("_ibkt").isin(touched.toSeq.sorted: _*))
   }
 
-  /** Lanes of exact agreement between two 16-lane signatures. */
-  private def sigAgree(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v)
+  /** Lanes of exact agreement between two 16-lane signatures
+    * ([[graft.plans.LaneAgree]]). */
+  private[graft] def sigAgree(a: Column, b: Column): Column =
+    GraftSqlBridge.column(LaneAgree(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** Probe: near-dup matches of the batch's inserts against (a) the
     * persisted index (earlier commits) and (b) the batch itself
@@ -166,8 +177,8 @@ object DedupIndex {
       numBuckets: Int = IndexBuckets): DataFrame = {
     // touched buckets: bounded driver collect (≤ numBuckets ints — the
     // same exact-probe class as the merge's touched-bucket collect);
-    // the pipeline passes the set its append observed, so the persisted
-    // bands frame is scanned once, not twice
+    // the pipeline passes the set `touchedBuckets` observed, so the
+    // persisted bands frame is not scanned for it a second time
     val touched = touchedHint.getOrElse(
       bands.select(col("_ibkt")).distinct()
         .collect().map(_.getInt(0)).toSet)
@@ -210,20 +221,26 @@ object DedupIndex {
         col("_m.agree").as("agree"))
   }
 
+  /** The index buckets a batch's persisted band rows touch — the near-dup
+    * stage's one materialization job: a `noop` write fills the cache and
+    * an Observation on it collects the `_ibkt` set, so the probe and the
+    * append then read the cache. Empty ⟺ the batch has no valid inserts
+    * (the stage then writes no index dir). */
+  def touchedBuckets(bands: DataFrame, commitId: String): Set[Int] = {
+    val obs = Observation(s"ibkt-$commitId")
+    bands.observe(obs, collect_set(col("_ibkt")).as("touched"))
+      .write.format("noop").mode("overwrite").save()
+    obs.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
+  }
+
   /** Append a batch's band rows to the index under its commitId (call
     * BEFORE the merge commit — see the exactly-once contract above):
     * one file per write task, rows sorted by `_ibkt`, no exchange.
-    * Returns the written dir and the batch's touched-bucket set,
-    * observed on that same write — no job of its own; empty ⟺ the batch
-    * had no valid inserts (the caller then deletes the dir). */
-  def append(
-      bands: DataFrame, dir: String, commitId: String): (Path, Set[Int]) = {
+    * Returns the written dir. */
+  def append(bands: DataFrame, dir: String, commitId: String): Path = {
     val out = indexRoot(dir).resolve(s"c-$commitId.${Fs.nonce}")
-    val obs = Observation(s"ibkt-$commitId")
-    bands.observe(obs, collect_set(col("_ibkt")).as("touched"))
-      .sortWithinPartitions("_ibkt")
-      .write.mode("overwrite").parquet(out.toString)
-    (out, obs.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet)
+    bands.sortWithinPartitions("_ibkt").write.mode("overwrite").parquet(out.toString)
+    out
   }
 
   /** Commit-dir count at which the pipeline folds the index — bounds the

@@ -17,6 +17,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * and then `SELECT graft_simhash(graft_shingles(tokens)) …` works in
   * plain SQL on every session of the cluster. The per-object `register`
   * helpers remain for ad-hoc/test use; this is the deployment path.
+  * (The near-dup index's kernels — [[TokenMinHash]], [[BandKeys]],
+  * [[LaneAgree]] — are no SQL functions: `DedupIndex` builds them as
+  * Columns directly.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -53,6 +56,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_rolling_hash"),
       info("graft_rolling_hash", "graft_rolling_hash(tokens) - rolling-hash fingerprint"),
       (exprs: Seq[Expression]) => RollingHash(exprs.head)))
+    ext.injectFunction((
+      FunctionIdentifier("graft_window_hashes"),
+      info("graft_window_hashes",
+        "graft_window_hashes(tokens, w) - distinct hashes of every length-w token window"),
+      (exprs: Seq[Expression]) => WindowHashes(exprs.head, exprs(1))))
     ext.injectFunction((
       FunctionIdentifier("graft_hyperplane_sigs"),
       info("graft_hyperplane_sigs",

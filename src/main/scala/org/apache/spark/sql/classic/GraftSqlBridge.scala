@@ -77,6 +77,11 @@ object GraftSqlBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     ExpressionUtils.column(e)
 
+  /** The inverse of [[column]]: a Column's (unresolved) catalyst
+    * expression, so an engine expression node can take Column children. */
+  def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    ExpressionUtils.expression(c)
+
   /** The inverse, for a V1 streaming Sink's `addBatch`: rebind the
     * micro-batch frame to its compiled RDD with the streaming flag OFF —
     * the `ForeachBatchSink` idiom. The sink's write path runs several

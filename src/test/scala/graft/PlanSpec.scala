@@ -113,6 +113,153 @@ class PlanSpec extends SparkSpec {
     assert(diff24 == 0, s"$diff24 rows diverge at numHashes=24")
   }
 
+  // ---- the near-dup index kernels vs their composed reference chain ----
+
+  /** Run `body` through whole-stage codegen (no silent fallback to
+    * interpreted on a codegen compile error) and then through the
+    * expressions' interpreted `eval` (no codegen at all). */
+  private def codegenAndInterpreted(body: String => Unit): Unit = {
+    val modes = Seq(
+      "whole-stage codegen" -> Seq("spark.sql.codegen.fallback" -> "false"),
+      "interpreted eval" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes) {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body(mode)
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** Token arrays the composed chain has edge behaviour on: a null array,
+    * fewer than 3 tokens, null tokens at the start, middle and end,
+    * negatives and Int.MinValue/MaxValue, and 40-50-token rows (full int
+    * range, some with nulls). Written to parquet so the plans under test
+    * scan a file, not a constant-folded local relation. */
+  private def adversarialTokens(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val n: Integer = null
+    val (lo, hi) = (Int.MinValue: Integer, Int.MaxValue: Integer)
+    def t(xs: Integer*): Seq[Integer] = xs
+    val fixed: Seq[Seq[Integer]] = Seq(null, t(), t(5), t(5, 9), t(1, 2, 3),
+      t(n), t(n, n, n), t(1, n, 3), t(n, 2, 3, 4, 5, 6), t(1, 2, n, 4, 5, 6, 7),
+      t(1, 2, 3, 4, 5, n), t(-1, -2, -3, -4), t(-7, 0, 7, -131, 131),
+      t(lo, hi, -1, 0, lo, lo, hi), t(hi, hi, hi, hi, hi), t(lo, lo, lo, lo, lo),
+      t(lo, n, hi, lo, hi, lo))
+    val rnd = new scala.util.Random(9)
+    val long: Seq[Seq[Integer]] = (0 until 40).map { r =>
+      (0 until 40 + rnd.nextInt(11)).map { _ =>
+        if (r % 3 == 0 && rnd.nextInt(12) == 0) n
+        else if (r % 2 == 0) Integer.valueOf(rnd.nextInt())
+        else Integer.valueOf(rnd.nextInt(2400))
+      }
+    }
+    val rows = (fixed ++ long).zipWithIndex.map { case (toks, i) =>
+      Row(s"d$i", i.toLong, toks)
+    }
+    val schema = StructType(Seq(StructField("doc_id", StringType), StructField("lsn", LongType),
+      StructField("tokens", ArrayType(IntegerType, containsNull = true))))
+    val dir = tmpDir("bandrows") + "/toks"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("fused band rows ≡ composed shingle → minhash → bandKeys chain (codegen and interpreted)") {
+    import graft.functions.DedupOps
+    import graft.operators.DedupIndex
+    import graft.plans.TokenMinHash
+    val toks = adversarialTokens()
+    // the reference spelling: the index's band rows as the composed
+    // HigherOrderFunction chain writes them
+    val composed = toks
+      .select(col("doc_id"), col("lsn"), DedupOps.minhash(
+        DedupOps.shinglesOfTokens(col("tokens").cast("array<int>"))).as("sig"))
+      .select(col("doc_id"), col("lsn"), col("sig"),
+        explode(DedupOps.bandKeys(col("sig"))).as("bk"))
+      .select(col("doc_id"), col("lsn"), col("sig"),
+        col("bk.band").as("band"), col("bk.key").as("key"))
+      .withColumn("_ibkt", pmod(xxhash64(col("band"), col("key")),
+        lit(DedupIndex.IndexBuckets.toLong)).cast("int"))
+    type BandRow = (String, Long, Seq[Long], Int, Long, Int)
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[BandRow] =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2).toList,
+        r.getInt(3), r.getLong(4), r.getInt(5))).toSeq.sortBy(r => (r._1, r._4))
+    val reference = rowsOf(composed)
+    val docs = toks.count()
+    assert(reference.size == docs * DedupOps.NumHashes / DedupOps.BandSize,
+      s"${reference.size} reference rows for $docs docs")
+    // the edge rows the contract names: a null array and < 3 tokens give
+    // P on every lane; a null token drops the shingles it touches
+    val allP = List.fill(DedupOps.NumHashes)(DedupOps.P)
+    Seq("d0", "d1", "d2", "d3", "d5", "d6").foreach { d =>
+      assert(reference.filter(_._1 == d).forall(_._3 == allP), s"$d is not all-P")
+    }
+    assert(reference.exists(r => r._3.exists(_ < 0)), "no negative lane in the domain")
+    codegenAndInterpreted { mode =>
+      val fused = DedupIndex.bandRows(toks)
+      val got = rowsOf(fused)
+      val diff = got.zip(reference).filter { case (a, b) => a != b }
+      assert(got.size == reference.size && diff.isEmpty,
+        s"$mode: fused band rows diverge (${got.size} vs ${reference.size} rows): ${diff.take(3)}")
+      val plan = fused.queryExecution.executedPlan
+      object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      val inCodegen = Walk.collect(plan) {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }.exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[TokenMinHash]))))
+      assert(inCodegen == (mode == "whole-stage codegen"), s"$mode:\n$plan")
+    }
+  }
+
+  test("fused lane agreement ≡ composed zip_with/aggregate count (codegen and interpreted)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.DedupOps
+    import graft.operators.DedupIndex
+    val n: java.lang.Long = null
+    def l(xs: Any*): Seq[java.lang.Long] = xs.map {
+      case null    => n
+      case v: Int  => java.lang.Long.valueOf(v.toLong)
+      case v: Long => java.lang.Long.valueOf(v)
+    }
+    // real signatures (from the adversarial token domain) against each
+    // other, plus nulls, unequal lengths and null lanes
+    val sigs = DedupIndex.bandRows(adversarialTokens()).select("sig").distinct()
+      .collect().map(_.getSeq[Long](0).map(java.lang.Long.valueOf)).toSeq
+    val real = for (a <- sigs.take(12); b <- sigs.take(12)) yield (a, b)
+    val edge = Seq[(Seq[java.lang.Long], Seq[java.lang.Long])](
+      (null, null), (null, l(1)), (l(1), null), (l(), l()), (l(1, 2, 3), l(1, 2)),
+      (l(1, 2), l(1, 2, 3, 4)), (l(n, 2, n), l(n, 2, 3)), (l(n), l(n)),
+      (l(-5, Long.MinValue, Long.MaxValue), l(-5, Long.MinValue, Long.MaxValue)),
+      (sigs.head.updated(3, n), sigs.head),
+      (sigs.head, sigs.head.updated(0, java.lang.Long.valueOf(7L))))
+    val schema = StructType(Seq(StructField("i", IntegerType),
+      StructField("a", ArrayType(LongType)), StructField("b", ArrayType(LongType))))
+    val rows = (real ++ edge).zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }
+    val dir = tmpDir("laneagree") + "/pairs"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema).write.parquet(dir)
+    val pairs = spark.read.parquet(dir)
+    val composed = aggregate(
+      zip_with(col("a"), col("b"), (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v)
+    def counts(c: org.apache.spark.sql.Column): Map[Int, Option[Int]] =
+      pairs.select(col("i"), c).collect()
+        .map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    val reference = counts(composed)
+    assert(reference.size == rows.size && reference.values.count(_.isEmpty) == 3)
+    assert(reference.values.flatten.toSet.contains(DedupOps.NumHashes) &&
+      reference.values.flatten.exists(_ < DedupOps.NumHashes))
+    codegenAndInterpreted { mode =>
+      val got = counts(DedupIndex.sigAgree(col("a"), col("b")))
+      assert(got == reference, s"$mode: lane agreement diverges: " +
+        got.filter { case (k, v) => reference(k) != v }.take(3))
+    }
+  }
+
   test("band config derives from the target Jaccard threshold (S-curve)") {
     import graft.functions.DedupOps
     // t* = (1/b)^(1/r) for b = 16/r: r=2 → .354, r=4 → .707, r=8 → .917
@@ -618,11 +765,13 @@ class PlanSpec extends SparkSpec {
                   graft_cosine(array(cast(1.0 AS float)), array(cast(1.0 AS float))) AS cos,
                   size(graft_minhash(graft_shingles(array(1,2,3,4,5)))) AS mh,
                   graft_rolling_hash(array(1,2,3)) AS fp,
-                  size(graft_hyperplane_sigs(array(cast(0.5 AS float)), 4, 2)) AS hp
+                  size(graft_hyperplane_sigs(array(cast(0.5 AS float)), 4, 2)) AS hp,
+                  size(graft_window_hashes(array(1,2,3,4,1,2), 2)) AS wh
         """).collect()(0)
       assert(r.getDouble(1) == 1.0)
       assert(r.getInt(2) == graft.functions.DedupOps.NumHashes)
       assert(r.getInt(4) == 2)
+      assert(r.getInt(5) == 4) // windows 12, 23, 34, 41, then 12 again
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
@@ -725,6 +874,76 @@ class PlanSpec extends SparkSpec {
         exchanges.head.asInstanceOf[ShuffleExchangeLike].shuffleOrigin == REPARTITION_BY_COL,
         s"expected the _ibkt range exchange:\n${compactions.head}")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("near-dup stage plans hold no ArrayTransform, ArrayAggregate or ZipWith") {
+    // the stage's executed plans — the materialize job, the index append,
+    // and the flag write that runs the probe — compute band rows and lane
+    // agreement with the compiled kernels, never with the interpreted
+    // (CodegenFallback) HigherOrderFunctions of the reference chain;
+    // the persisted band rows' cached plan is walked too
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, ZipWith}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.streaming.{CdcPipeline, PipelineConfig}
+    import spark.implicits._
+    object Walk extends AdaptiveSparkPlanHelper
+    def interpretedHofs(plan: SparkPlan): Seq[String] =
+      Walk.collectWithSubqueries(plan) { case node => node }.flatMap { node =>
+        node.expressions.flatMap(_.collect {
+          case e @ (_: ArrayTransform | _: ArrayAggregate | _: ZipWith) => e.prettyName
+        }) ++ (node match {
+          case m: InMemoryTableScanExec => interpretedHofs(m.relation.cachedPlan)
+          case _                        => Nil
+        })
+      }
+    val base = tmpDir("ndhof")
+    val p = new CdcPipeline(spark, PipelineConfig(
+      tableRoot = s"$base/table", changeLogDir = s"$base/changelog",
+      checkpointDir = s"$base/checkpoint", errorDir = s"$base/errors",
+      lineageDir = s"$base/lineage", numBuckets = 4, mode = "mor",
+      nearDupPolicy = "flag"))
+    def toks(i: Int) = (0 until 30).map(j => (i * 1000 + j * 7) % 65536)
+    def batch(ids: Seq[Int], lsn0: Long) = ids.map(i =>
+      (lsn0 + i, "I", s"doc$i", Option(toks(i % 40)), Option(30L), "s"))
+      .toDF("lsn", "op", "doc_id", "tokens", "n_tok", "source")
+    p.applyBatch(batch(0 until 40, 0L), 0L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // docs 40..79 repeat docs 0..39's tokens: every one is flagged
+      p.applyBatch(batch(40 until 80, 1000L), 1L)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(p.readNearDups().count() == 40)
+    import scala.collection.JavaConverters._
+    val all = plans.asScala.toSeq
+    val root = s"$base/neardups"
+    def one(what: String)(pick: String => Boolean): SparkPlan = {
+      val hits = all.filter(pl => pick(pl.toString))
+      assert(hits.size == 1, s"$what: ${hits.size} plans of ${all.size}")
+      hits.head
+    }
+    val stage = Seq(
+      "materialize" -> one("materialize")(_.toLowerCase.contains("noop")),
+      "append" -> one("append")(s => s.contains("WriteFiles") && s.contains(s"$root/index/c-b1.")),
+      "flag write" -> one("flag write")(s => s.contains("WriteFiles") && s.contains(s"$root/.staged-c-b1-")))
+    assert(Walk.collect(stage.last._2) { case j: BroadcastHashJoinExec => j }.nonEmpty,
+      s"the flag write does not run the probe's join:\n${stage.last._2}")
+    stage.foreach { case (what, pl) =>
+      val hofs = interpretedHofs(pl)
+      assert(hofs.isEmpty, s"$what runs interpreted ${hofs.distinct.mkString(", ")}:\n$pl")
+    }
   }
 
   test("changesSince delta replay is a pure file read: no exchange, no join") {
