@@ -38,7 +38,7 @@ import graft.table.{Fs, KnownFiles}
   *    duplication that saves the probe a signature-lookup join).
   *  - Physical layout: `<indexDir>/c-<commitId>.<nonce>/part-*.parquet`,
   *    one file per write task, rows sorted by the stored `_ibkt` column
-  *    (xxhash64(band, key) mod `numBuckets`). A probe opens the applied
+  *    (xxhash64(band, key) mod [[IndexBuckets]]). A probe opens the applied
   *    commits' files with `_ibkt IN touched` pushed down to the parquet
   *    footers and row-group statistics, so only the buckets its batch's
   *    band keys hash into are decoded — O(batch + touched index data),
@@ -59,7 +59,7 @@ import graft.table.{Fs, KnownFiles}
   *
   * Match rule (deliberately non-recursive so a SQL oracle can replay
   * it): an arriving insert X is a near-dup of Y iff they share ≥1 band
-  * key AND their signatures agree on ≥ `agreeMin` of 16 lanes AND Y's
+  * key AND their signatures agree on ≥ [[AgreeMin]] of 16 lanes AND Y's
   * insert LSN precedes X's (ties: doc_id). EVERY valid insert is
   * indexed, flagged or not — so "flagged" is a pure join against
   * earlier inserts, no fixpoint. In-order delivery (a WAL/binlog tail
@@ -117,14 +117,14 @@ object DedupIndex {
     * [[graft.plans.TokenMinHash]] signs the tokens, [[graft.plans.BandKeys]]
     * keys the bands and `posexplode` numbers them, bit-equal to the
     * composed reference chain (see the scaladoc above). Callers persist —
-    * the frame feeds the touched-bucket pass, the append and the probe. */
-  def bandRows(inserts: DataFrame, numBuckets: Int = IndexBuckets): DataFrame =
+    * the frame feeds the append and the probe. */
+  def bandRows(inserts: DataFrame): DataFrame =
     inserts
       .select(col("doc_id"), col("lsn"), signature(col("tokens").cast("array<int>")).as("sig"))
       .select(col("doc_id"), col("lsn"), col("sig"), posexplode(bandKeyArray(col("sig"))))
       .select(col("doc_id"), col("lsn"), col("sig"), col("pos").as("band"), col("col").as("key"))
       .withColumn("_ibkt",
-        pmod(xxhash64(col("band"), col("key")), lit(numBuckets.toLong)).cast("int"))
+        pmod(xxhash64(col("band"), col("key")), lit(IndexBuckets.toLong)).cast("int"))
 
   /** [[graft.plans.TokenMinHash]] over an `array<int>` token column. */
   private def signature(tokens: Column): Column =
@@ -146,15 +146,14 @@ object DedupIndex {
   private[graft] def indexPaths(dir: String, applied: Set[String]): Seq[Path] =
     appliedDirs(indexRoot(dir), applied)
 
-  /** Ledger-visible index rows restricted to `touched` of the index's
-    * `numBuckets` buckets; a batch touching all of them reads the index
-    * unfiltered (the predicate would prune nothing). [[KnownFiles]]
+  /** Ledger-visible index rows restricted to `touched` of the
+    * [[IndexBuckets]] buckets; a batch touching all of them reads the
+    * index unfiltered (the predicate would prune nothing). [[KnownFiles]]
     * lists the flat commit dirs, so the probe runs no Spark listing job. */
   private def readIndex(
-      spark: SparkSession, dir: String, applied: Set[String],
-      touched: Set[Int], numBuckets: Int): DataFrame = {
+      spark: SparkSession, dir: String, applied: Set[String], touched: Set[Int]): DataFrame = {
     val idx = KnownFiles.read(spark, KnownFiles.ofDirs(indexPaths(dir, applied)), IndexSchema)
-    if ((0 until numBuckets).forall(touched.contains)) idx
+    if ((0 until IndexBuckets).forall(touched.contains)) idx
     else idx.filter(col("_ibkt").isin(touched.toSeq.sorted: _*))
   }
 
@@ -168,16 +167,13 @@ object DedupIndex {
     * (within-batch pairs, earlier (lsn, doc_id) wins). Returns one row
     * per flagged doc: (doc_id, lsn, dup_of, dup_lsn, agree), dup_of =
     * the earliest matching doc (deterministic representative).
-    * @param bands persisted [[bandRows]] of the batch
-    * @param numBuckets the index bucket count `bands` was built with */
+    * @param bands persisted [[bandRows]] of the batch */
   def probe(
       spark: SparkSession, dir: String, applied: Set[String],
-      bands: DataFrame, agreeMin: Int = AgreeMin,
-      touchedHint: Option[Set[Int]] = None,
-      numBuckets: Int = IndexBuckets): DataFrame = {
-    // touched buckets: bounded driver collect (≤ numBuckets ints — the
+      bands: DataFrame, touchedHint: Option[Set[Int]] = None): DataFrame = {
+    // touched buckets: bounded driver collect (≤ IndexBuckets ints — the
     // same exact-probe class as the merge's touched-bucket collect);
-    // the pipeline passes the set `touchedBuckets` observed, so the
+    // the pipeline passes the set its `append` observed, so the
     // persisted bands frame is not scanned for it a second time
     val touched = touchedHint.getOrElse(
       bands.select(col("_ibkt")).distinct()
@@ -189,7 +185,7 @@ object DedupIndex {
     // ONE join: the earlier side is the index (earlier commits) plus the
     // batch's own band rows (within-batch pairs), so one broadcast of the
     // batch serves both arms
-    val earlierSide = asEarlier(readIndex(spark, dir, applied, touched, numBuckets))
+    val earlierSide = asEarlier(readIndex(spark, dir, applied, touched))
       .unionByName(asEarlier(b))
     val earlier = col("_i_lsn") < col("lsn") ||
       (col("_i_lsn") === col("lsn") && col("_i_doc") < col("doc_id"))
@@ -199,7 +195,7 @@ object DedupIndex {
       .select(col("doc_id"), col("lsn"),
         col("_i_doc").as("dup_of"), col("_i_lsn").as("dup_lsn"),
         sigAgree(col("sig"), col("_i_sig")).as("agree"))
-      .filter(col("agree") >= agreeMin)
+      .filter(col("agree") >= AgreeMin)
     // deterministic representative: earliest (dup_lsn, dup_of) per doc —
     // as a map-side-combining min_by aggregate, not a row_number window:
     // the window spelling paid a full sort of every candidate row inside
@@ -221,26 +217,20 @@ object DedupIndex {
         col("_m.agree").as("agree"))
   }
 
-  /** The index buckets a batch's persisted band rows touch — the near-dup
-    * stage's one materialization job: a `noop` write fills the cache and
-    * an Observation on it collects the `_ibkt` set, so the probe and the
-    * append then read the cache. Empty ⟺ the batch has no valid inserts
-    * (the stage then writes no index dir). */
-  def touchedBuckets(bands: DataFrame, commitId: String): Set[Int] = {
-    val obs = Observation(s"ibkt-$commitId")
-    bands.observe(obs, collect_set(col("_ibkt")).as("touched"))
-      .write.format("noop").mode("overwrite").save()
-    obs.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
-  }
-
   /** Append a batch's band rows to the index under its commitId (call
     * BEFORE the merge commit — see the exactly-once contract above):
-    * one file per write task, rows sorted by `_ibkt`, no exchange.
-    * Returns the written dir. */
-  def append(bands: DataFrame, dir: String, commitId: String): Path = {
+    * one file per write task, rows sorted by `_ibkt`, no exchange. Its
+    * one job also fills the persisted band rows the probe then reads,
+    * and an Observation on that write returns the touched `_ibkt` set.
+    * Empty ⟺ the batch had no valid inserts (the caller then
+    * [[discard]]s the commit's dir). */
+  def append(bands: DataFrame, dir: String, commitId: String): Set[Int] = {
     val out = indexRoot(dir).resolve(s"c-$commitId.${Fs.nonce}")
-    bands.sortWithinPartitions("_ibkt").write.mode("overwrite").parquet(out.toString)
-    out
+    val obs = Observation(s"ibkt-$commitId")
+    bands.observe(obs, collect_set(col("_ibkt")).as("touched"))
+      .sortWithinPartitions("_ibkt")
+      .write.mode("overwrite").parquet(out.toString)
+    obs.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
   }
 
   /** Commit-dir count at which the pipeline folds the index — bounds the
@@ -280,7 +270,9 @@ object DedupIndex {
 
   /** Delete a commit's index and roster dirs by name: a batch that
     * whole-rejects under a ledgered commitId must leave none, whatever
-    * its near-dup stage recorded before it finished or failed. */
+    * its near-dup stage recorded before it finished or failed, and an
+    * insert-free batch drops its empty append (and any orphan of a
+    * crashed earlier attempt of the same commit) this way. */
   def discard(dir: String, commitId: String): Unit =
     Seq(indexRoot(dir), rosterRoot(dir)).filter(Files.isDirectory(_))
       .flatMap(Fs.listDir)

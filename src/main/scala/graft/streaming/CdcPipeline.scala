@@ -67,9 +67,7 @@ case class PipelineConfig(
     // near-dup state root ("" → sibling of errorDir named "neardups"):
     // flags publish under <root>/c-<id>, the band index under
     // <root>/index, the quarantine roster under <root>/quarantined
-    nearDupDir: String = "",
-    nearDupIndexBuckets: Int = graft.operators.DedupIndex.IndexBuckets,
-    nearDupAgreeMin: Int = graft.operators.DedupIndex.AgreeMin)
+    nearDupDir: String = "")
 
 /** The engine's core: change-log tail → conform → validate/route →
   * LWW dedup → exactly-once MERGE, as a Structured Streaming
@@ -333,80 +331,62 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
         (valid.join(r, col("doc_id") === col("_q_doc"), "left_anti"),
           Some(errRows(hits, col("_q_dup"))))
       }
-    // 2. index + probe this batch's inserts. ONE materialization job
-    // (touchedBuckets) fills the persisted band rows and observes their
-    // touched-bucket set; an empty set means no valid inserts, and such a
-    // batch writes no index dir. Then the APPEND (sort + write from the
-    // cache, under the commit's not-yet-applied, hence probe-invisible,
-    // index dir) runs on its own future beside the probe and the flag
-    // staging, which read the same cache; every path below joins it
-    // before the stage returns or throws, so the index dir is complete
-    // before the merge's barrier and a failing stage never leaves an
-    // append running behind a reject's sweep. EVERY valid insert is
+    // 2. index + probe this batch's inserts. The APPEND runs first and is
+    // the batch's ONE materialization job: it writes the band rows under
+    // the commit's (not-yet-applied, hence probe-invisible) index dir
+    // while filling the persisted frame the probe then reads, and an
+    // Observation on that same write yields the touched-bucket set. An
+    // empty set means no valid inserts: the commit's dir is dropped by
+    // name, so such a batch leaves no index dir. EVERY valid insert is
     // indexed, flagged or not — the non-recursive match rule the oracle
     // replays (DedupIndex scaladoc).
     val inserts = events1.filter(col("op") === "I" && col("doc_id").isNotNull)
-    val bands = DedupIndex.bandRows(inserts, cfg.nearDupIndexBuckets)
+    val bands = DedupIndex.bandRows(inserts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched = DedupIndex.touchedBuckets(bands, commitId)
-    if (touched.isEmpty) { // update/delete-only batch: nothing indexed
-      bands.unpersist()
-      return NearDupOutcome(events1, rosterErrs, None, Seq.empty)
-    }
-    val sc = spark.sparkContext
-    val appended = scala.concurrent.Future {
-      sc.setJobDescription(s"cdc $commitId neardup")
-      DedupIndex.append(bands, nearDupRoot, commitId)
-    }(scala.concurrent.ExecutionContext.global)
-    def joinAppend(): Unit = {
-      scala.concurrent.Await.result(appended, scala.concurrent.duration.Duration.Inf)
-      ()
-    }
-    val outcome =
-      try {
-        // under "flag" the probe result has exactly ONE consumer (the staged
-        // flag rows) — persisting it would only add a cache write; under
-        // "quarantine" it feeds the roster append and two joins, so pin it
-        val flags0 = DedupIndex.probe(
-          spark, nearDupRoot, applied, bands, cfg.nearDupAgreeMin, Some(touched),
-          cfg.nearDupIndexBuckets)
-        val flags =
-          if (cfg.nearDupPolicy == "flag") flags0
-          else flags0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // keep the probe's per-batch file count bounded: fold applied
-        // commits' index dirs once they pile up (the folded dir keys under
-        // the current HEAD's commitId — already applied, so visibility is
-        // unchanged; this batch's own dir is not yet applied and stays out)
-        if (DedupIndex.commitDirCount(nearDupRoot, applied) >= DedupIndex.CompactAt)
-          table.current.foreach { head =>
-            DedupIndex.compact(spark, nearDupRoot, applied, head.commitId)
-            ()
-          }
-        val flagRows = flags.select(
-          lit(commitId).as("commit_id"), col("doc_id"), col("lsn"),
-          col("dup_of"), col("dup_lsn"), col("agree"))
-        val stagedFlags = stageSide(flagRows, nearDupRoot, commitId)
-        val persisted = Seq(bands, flags)
-        if (cfg.nearDupPolicy == "flag")
-          NearDupOutcome(events1, rosterErrs, stagedFlags, persisted)
-        else {
-          DedupIndex.appendRoster(flags, nearDupRoot, commitId)
-          val f = flags.select(col("doc_id").as("_f_doc"), col("dup_of").as("_f_dup"))
-          val flaggedEvents = events1.join(f, col("doc_id") === col("_f_doc"))
-          val errs = errRows(flaggedEvents, col("_f_dup"))
-          val remaining = events1.join(f, col("doc_id") === col("_f_doc"), "left_anti")
-          val allErrs = rosterErrs.map(_.unionByName(errs)).getOrElse(errs)
-          NearDupOutcome(remaining, Some(allErrs), stagedFlags, persisted)
-        }
-      } catch {
-        case e: Throwable =>
-          try joinAppend() catch { case scala.util.control.NonFatal(a) => e.addSuppressed(a) }
-          bands.unpersist()
-          throw e
+    try {
+      val touched = DedupIndex.append(bands, nearDupRoot, commitId)
+      if (touched.isEmpty) { // update/delete-only batch: nothing indexed
+        DedupIndex.discard(nearDupRoot, commitId)
+        bands.unpersist()
+        return NearDupOutcome(events1, rosterErrs, None, Seq.empty)
       }
-    try joinAppend()
-    catch { case e: Throwable => outcome.unpersist(); throw e }
-    outcome
+      // under "flag" the probe result has exactly ONE consumer (the staged
+      // flag rows) — persisting it would only add a cache write; under
+      // "quarantine" it feeds the roster append and two joins, so pin it
+      val flags0 = DedupIndex.probe(spark, nearDupRoot, applied, bands, Some(touched))
+      val flags =
+        if (cfg.nearDupPolicy == "flag") flags0
+        else flags0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // keep the probe's per-batch file count bounded: fold applied
+      // commits' index dirs once they pile up (the folded dir keys under
+      // the current HEAD's commitId — already applied, so visibility is
+      // unchanged; this batch's own dir is not yet applied and stays out)
+      if (DedupIndex.commitDirCount(nearDupRoot, applied) >= DedupIndex.CompactAt)
+        table.current.foreach { head =>
+          DedupIndex.compact(spark, nearDupRoot, applied, head.commitId)
+          ()
+        }
+      val flagRows = flags.select(
+        lit(commitId).as("commit_id"), col("doc_id"), col("lsn"),
+        col("dup_of"), col("dup_lsn"), col("agree"))
+      val stagedFlags = stageSide(flagRows, nearDupRoot, commitId)
+      val persisted = Seq(bands, flags)
+      if (cfg.nearDupPolicy == "flag")
+        NearDupOutcome(events1, rosterErrs, stagedFlags, persisted)
+      else {
+        DedupIndex.appendRoster(flags, nearDupRoot, commitId)
+        val f = flags.select(col("doc_id").as("_f_doc"), col("dup_of").as("_f_dup"))
+        val flaggedEvents = events1.join(f, col("doc_id") === col("_f_doc"))
+        val errs = errRows(flaggedEvents, col("_f_dup"))
+        val remaining = events1.join(f, col("doc_id") === col("_f_doc"), "left_anti")
+        val allErrs = rosterErrs.map(_.unionByName(errs)).getOrElse(errs)
+        NearDupOutcome(remaining, Some(allErrs), stagedFlags, persisted)
+      }
+    } catch {
+      case e: Throwable =>
+        bands.unpersist()
+        throw e
+    }
   }
 
   /** Near-dup flags side table (published commits only). */

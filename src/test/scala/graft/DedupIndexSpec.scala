@@ -267,65 +267,6 @@ class DedupIndexSpec extends SparkSpec {
     assert(buckets.size == 30 * 4 && buckets == buckets.sorted, "rows not sorted by _ibkt")
   }
 
-  /** Spark jobs seen while registered: (description, end time, failed). */
-  private class JobLog extends org.apache.spark.scheduler.SparkListener {
-    import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart}
-    private val descs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val ends = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Boolean)]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      descs.put(e.jobId, Option(e.properties)
-        .flatMap(pr => Option(pr.getProperty("spark.job.description"))).getOrElse(""))
-      ()
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      ends.add((descs.getOrDefault(e.jobId, ""), e.time, e.jobResult != JobSucceeded))
-      ()
-    }
-    def labelled(label: String): Seq[(String, Long, Boolean)] = {
-      import scala.collection.JavaConverters._
-      ends.iterator().asScala.filter(_._1 == label).toSeq
-    }
-  }
-
-  /** Run `body`, a batch under `commitId` whose near-dup probe fails, with
-    * that commit's index append held in flight (its parquet file create
-    * blocks in [[GatedLocalFs]]) until 1.5 s after the probe's job failed.
-    * Asserts the stage joined the append before its failure surfaced: the
-    * append really was held, `body` returned only after the gate opened,
-    * and every `cdc <commitId> neardup` job had ended by then. */
-  private def withAppendInFlight[A](base: String, commitId: String)(body: => A): scala.util.Try[A] = {
-    val label = s"cdc $commitId neardup"
-    val log = new JobLog
-    @volatile var openedAt = Long.MaxValue
-    val opener = new Thread(() => {
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!log.labelled(label).exists(_._3) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      Thread.sleep(1500)
-      openedAt = System.currentTimeMillis()
-      GatedLocalFs.open()
-    })
-    spark.sparkContext.addSparkListener(log)
-    val (out, returnedAt) =
-      try GatedLocalFs.during(spark) {
-        GatedLocalFs.arm(s"$base/neardups/index/c-$commitId.")
-        opener.start()
-        val out = scala.util.Try(body)
-        val returnedAt = System.currentTimeMillis()
-        opener.join()
-        org.apache.spark.TestBus.drain(spark.sparkContext)
-        (out, returnedAt)
-      } finally spark.sparkContext.removeSparkListener(log)
-    val jobs = log.labelled(label)
-    assert(GatedLocalFs.held, "the index append never reached its file create")
-    assert(jobs.exists(_._3), s"no $label job failed: $jobs")
-    assert(returnedAt >= openedAt,
-      s"the failure surfaced ${openedAt - returnedAt} ms before the held append was let go")
-    assert(jobs.forall(_._2 <= returnedAt),
-      s"$label jobs ended after the failure surfaced: ${jobs.filter(_._2 > returnedAt)}")
-    out
-  }
-
   /** Overwrite every applied index file with garbage; returns a restore. */
   private def corruptIndex(base: String): () => Unit = {
     val files = graft.table.Fs.walkDir(java.nio.file.Paths.get(base, "neardups", "index"))
@@ -337,20 +278,18 @@ class DedupIndexSpec extends SparkSpec {
 
   test("whole-batch reject after a failed near-dup stage leaves none of its commit's index") {
     // The flag-policy stage runs beside the merge. Here its probe fails on
-    // an unreadable applied index file while its index append is still in
-    // flight, and the merge rejects the batch (non-widenable schema
+    // an unreadable applied index file after its index append wrote the
+    // commit's dir, and the merge rejects the batch (non-widenable schema
     // change): the reject ledgers the commit, so its index dir must go,
     // or docB's band rows would become probe-visible for a doc that never
-    // merged — which needs the stage to have joined the append first.
+    // merged.
     val base = tmpDir("nd-reject")
     val p = mkPipeline(base, "flag")
     def withUpstream(doc: String, lsn: Long, up: org.apache.spark.sql.Column) =
       batch((lsn, "I", doc, toks(1))).withColumn("upstream", up)
     p.applyBatch(withUpstream("docA", 1L, lit(7)), 0L)
     corruptIndex(base)
-    val s1 = withAppendInFlight(base, "b1") {
-      p.applyBatch(withUpstream("docB", 10L, lit("oops")), 1L)
-    }.get
+    val s1 = p.applyBatch(withUpstream("docB", 10L, lit("oops")), 1L)
     assert(s1.schemaChanges.exists(_.contains("schema_incompatible")), s1.schemaChanges)
     assert(p.table.appliedCommitIds.contains("b1"))
     val root = java.nio.file.Paths.get(base, "neardups")
@@ -376,12 +315,13 @@ class DedupIndexSpec extends SparkSpec {
     val p = mkPipeline(base, "flag")
     p.applyBatch(b0, 0L)
     val restore = corruptIndex(base)
-    val failed = withAppendInFlight(base, "b1")(p.applyBatch(b1, 1L))
+    val failed = scala.util.Try(p.applyBatch(b1, 1L))
     assert(failed.isFailure, s"the batch applied over an unreadable index: $failed")
     assert(!p.table.appliedCommitIds.contains("b1"))
-    // replay once the index reads again: the failed attempt's (complete,
-    // joined) index dir becomes visible beside the replay's under the same
-    // commitId; its duplicate rows must change no flag
+    // replay once the index reads again: the failed attempt's complete
+    // index dir (written before its probe ran) becomes visible beside the
+    // replay's under the same commitId; its duplicate rows must change no
+    // flag
     restore()
     p.applyBatch(b1, 1L)
     p.applyBatch(b2, 2L)
@@ -489,27 +429,9 @@ class DedupIndexSpec extends SparkSpec {
     val base = tmpDir("nd-skip")
     val p = mkPipeline(base, "flag")
     p.applyBatch(batch((1L, "I", "docA", toks(1))), 0L)
-    // no write ever targets an index dir of batch 1 (not even one that
-    // is deleted afterwards)
-    val idxB1 = java.nio.file.Paths.get(base, "neardups", "index", "c-b1.").toString
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def note(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-        val s = qe.executedPlan.toString
-        if (s.contains(idxB1)) writes.add(s); ()
-      }
-      override def onSuccess(
-          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = note(qe)
-      override def onFailure(
-          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = note(qe)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      p.applyBatch(batch((10L, "U", "docA", toks(6))), 1L)
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(writes.isEmpty, s"batch 1 wrote an index dir:\n${writes.peek()}")
-    // only batch 0 wrote index rows
+    p.applyBatch(batch((10L, "U", "docA", toks(6))), 1L)
+    // only batch 0's index commit is on disk: batch 1's empty append was
+    // dropped before its stage returned
     val idxRoot = java.nio.file.Paths.get(base, "neardups", "index")
     val commits = graft.table.Fs.listDir(idxRoot)
       .flatMap(d => DedupIndex.commitOf(d.getFileName.toString))

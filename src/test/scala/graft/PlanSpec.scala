@@ -877,28 +877,33 @@ class PlanSpec extends SparkSpec {
   }
 
   test("near-dup stage plans hold no ArrayTransform, ArrayAggregate or ZipWith") {
-    // the stage's executed plans — the materialize job, the index append,
-    // and the flag write that runs the probe — compute band rows and lane
-    // agreement with the compiled kernels, never with the interpreted
-    // (CodegenFallback) HigherOrderFunctions of the reference chain;
-    // the persisted band rows' cached plan is walked too
-    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, ZipWith}
-    import org.apache.spark.sql.execution.SparkPlan
+    // the stage's executed plans — the index append, which is also the
+    // one job that fills the band-row cache and observes the touched
+    // buckets (no separate `noop` materialize job), and the flag write
+    // that runs the probe — compute band rows and lane agreement with the
+    // compiled kernels, never with the interpreted (CodegenFallback)
+    // HigherOrderFunctions of the reference chain; the persisted band
+    // rows' cached plan is walked too
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, Expression, ZipWith}
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.operators.DedupIndex
+    import graft.plans.TokenMinHash
     import graft.streaming.{CdcPipeline, PipelineConfig}
     import spark.implicits._
     object Walk extends AdaptiveSparkPlanHelper
-    def interpretedHofs(plan: SparkPlan): Seq[String] =
+    def expressions(plan: SparkPlan): Seq[Expression] =
       Walk.collectWithSubqueries(plan) { case node => node }.flatMap { node =>
-        node.expressions.flatMap(_.collect {
-          case e @ (_: ArrayTransform | _: ArrayAggregate | _: ZipWith) => e.prettyName
-        }) ++ (node match {
-          case m: InMemoryTableScanExec => interpretedHofs(m.relation.cachedPlan)
+        node.expressions.flatMap(_.collect { case e => e }) ++ (node match {
+          case m: InMemoryTableScanExec => expressions(m.relation.cachedPlan)
           case _                        => Nil
         })
       }
+    def interpretedHofs(plan: SparkPlan): Seq[String] = expressions(plan).collect {
+      case e @ (_: ArrayTransform | _: ArrayAggregate | _: ZipWith) => e.prettyName
+    }
     val base = tmpDir("ndhof")
     val p = new CdcPipeline(spark, PipelineConfig(
       tableRoot = s"$base/table", changeLogDir = s"$base/changelog",
@@ -934,10 +939,18 @@ class PlanSpec extends SparkSpec {
       assert(hits.size == 1, s"$what: ${hits.size} plans of ${all.size}")
       hits.head
     }
+    val noops = all.filter(_.toString.contains("NoopWrite"))
+    assert(noops.isEmpty, s"a noop write ran beside the index append:\n${noops.mkString("\n")}")
     val stage = Seq(
-      "materialize" -> one("materialize")(_.toLowerCase.contains("noop")),
       "append" -> one("append")(s => s.contains("WriteFiles") && s.contains(s"$root/index/c-b1.")),
       "flag write" -> one("flag write")(s => s.contains("WriteFiles") && s.contains(s"$root/.staged-c-b1-")))
+    // the append observes the touched buckets over the band rows it writes
+    val observed = Walk.collect(stage.head._2) { case c: CollectMetricsExec => c }
+    assert(observed.map(_.name) == Seq("ibkt-b1"),
+      s"the index append carries no touched-bucket observation:\n${stage.head._2}")
+    assert(observed.head.child.output.map(_.name) == DedupIndex.IndexSchema.fieldNames.toSeq &&
+      expressions(observed.head.child).exists(_.isInstanceOf[TokenMinHash]),
+      s"the touched-bucket observation is not over the band rows:\n${stage.head._2}")
     assert(Walk.collect(stage.last._2) { case j: BroadcastHashJoinExec => j }.nonEmpty,
       s"the flag write does not run the probe's join:\n${stage.last._2}")
     stage.foreach { case (what, pl) =>
